@@ -94,13 +94,9 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
                          "payload bytes (bit-level write integrity check)")
     sp.add_argument("--no-append-fastpath", action="store_true",
                     help="disable the COW append fast-path (insert-only "
-                         "partitions with provably disjoint keys append a "
-                         "new file instead of rewriting the partition)")
-    sp.add_argument("--append-scan-ratio", type=float, default=None,
-                    help="enable the fast-path's keys-only overlap SCAN "
-                         "tier when candidate incumbent rows are at least "
-                         "this multiple of the batch rows (default: off; "
-                         "the zero-cost zone-map tier is always on)")
+                         "partitions whose key range is disjoint from the "
+                         "incumbent's append a new file instead of "
+                         "rewriting the partition)")
 
     sp = sub.add_parser("compact")
     sp.add_argument("--table", required=True)
@@ -204,7 +200,6 @@ def main(argv: list[str] | None = None) -> int:
             grouped_resolve=args.grouped_resolve,
             write_mode=args.write_mode,
             cow_append_fastpath=not args.no_append_fastpath,
-            cow_append_scan_min_ratio=args.append_scan_ratio,
             mor_compact_delta_ratio=args.compact_delta_ratio,
             partstats_mode=args.partstats_mode,
         )

@@ -11,8 +11,7 @@ hashes — cheap ledger columns the engine computes and records per batch.
 
 from __future__ import annotations
 
-import os
-from dataclasses import dataclass, field
+from dataclasses import InitVar, dataclass, field
 
 
 # --- metric registry (analog of ALL_HASHES, reference hashing_config.py:507-509) ---
@@ -147,134 +146,32 @@ class EngineConfig:
     write_mode: str = "cow"
 
     #: copy-on-write APPEND fast-path. A touched partition whose batch
-    #: slice is pure inserts (every event op == 'I') and whose keys have
-    #: ZERO overlap with the incumbent's keys (verified by a keys-only
-    #: columnar scan + semi-join — live rows AND tombstones both count as
-    #: overlap, so appended partitions keep the one-live-row-per-key
-    #: invariant) is APPENDED instead of rewritten: the batch's resolved
-    #: winners land in a new file, the incumbent files carry forward in
-    #: the manifest verbatim, and the partition's lineage stats combine
-    #: exactly (the checksum is an order-independent ``bit_xor`` of
-    #: per-row hashes, so ``old XOR new`` equals what a full rewrite
-    #: would store; guarded by a per-entry checksum-column-set id so a
-    #: schema evolution can never combine hashes computed over different
-    #: column sets). Insert-heavy streams go from O(table-rewrite) per
-    #: batch to O(batch): a bulk load of N batches writes each row once
-    #: instead of N/2 times — at 100 TB that's the difference between a
-    #: load that works and one that re-encodes the table every batch.
-    #: Update/delete-containing buckets take the normal merge path with
-    #: zero added cost (the classification scan only runs on all-insert
-    #: buckets). False forces full rewrites (pre-round-5 behavior).
+    #: slice is pure inserts (every event op == 'I', no NULL merge key)
+    #: and whose key range is strictly disjoint from the incumbent's is
+    #: APPENDED instead of rewritten: the batch's resolved winners land in
+    #: a new file, the incumbent files carry forward in the manifest
+    #: verbatim, and the partition's lineage stats combine exactly (the
+    #: checksum is an order-independent ``bit_xor`` of per-row hashes, so
+    #: ``old XOR new`` equals what a full rewrite would store; guarded by
+    #: a per-entry checksum-column-set id so a schema evolution can never
+    #: combine hashes computed over different column sets). Insert-heavy
+    #: streams go from O(table-rewrite) per batch to O(batch): a bulk load
+    #: of N batches writes each row once instead of N/2 times.
     #:
-    #: Two detection tiers:
-    #: * METADATA (always on with the fast-path): per-partition key
-    #:   [lo, hi] zone maps stored in the manifest vs the batch bucket's
-    #:   key range from the prepass — strictly disjoint ranges prove key
-    #:   disjointness with ZERO extra jobs. Monotonic insert keys
-    #:   (auto-increment ids, snowflakes, event time — the classic CDC
-    #:   insert pattern) append on metadata alone.
-    #: * SCAN (gated by ``cow_append_scan_min_ratio``): a keys-only
-    #:   columnar scan of the remaining candidates semi-joined with the
-    #:   batch's keys — catches interleaved-but-disjoint key sets the
-    #:   zone maps can't prove.
+    #: Disjointness is proven on METADATA alone: the per-partition key
+    #: [lo, hi] zone map stored in the manifest vs the batch bucket's key
+    #: range from the prepass, so the check costs zero extra Spark jobs.
+    #: Monotonic insert keys (auto-increment ids, snowflakes, event time —
+    #: the classic CDC insert pattern) append; any range overlap, even of
+    #: disjoint key sets, takes the normal rewrite. False forces full
+    #: rewrites.
     cow_append_fastpath: bool = True
 
-    #: gate for the append fast-path's SCAN tier: the keys-only overlap
-    #: scan runs only when the candidates' incumbent rows (the rewrite
-    #: it would avoid) are at least this multiple of the batch rows
-    #: landing in them (the scan's cost scales with incumbent keys; the
-    #: saving scales with incumbent payload bytes). ``None`` (default)
-    #: disables the scan tier: it costs two extra Spark jobs per
-    #: insert-only batch, and the sandbox's congested windows have not
-    #: yet yielded a clean measurement proving it nets out at bench
-    #: shape (BENCH/BASELINE.md round 5 records the attempts); the
-    #: zero-cost metadata tier stays on regardless. Set ~2-4 on tables
-    #: with wide payloads and random-key insert streams.
-    cow_append_scan_min_ratio: float | None = None
-
-    #: COW two-stream merge — the append fast-path's MERGE-PROVEN tier
-    #: (guide §2.2: shuffle fewer bytes). A rewrite partition whose batch
-    #: slice is PURE INSERTS contributes only NARROW incumbent rows (merge
-    #: keys + ts/lsn/op; payload column chunks never leave the parquet
-    #: scan) to the resolve window, and the merge's own observation counts
-    #: winners that displaced an incumbent key. Zero displaced ⇒ the
-    #: winner file is provably key-disjoint from the incumbent, so it
-    #: APPENDS and the incumbent files carry forward — the append
-    #: fast-path outcome for the interleaved key ranges the zone-map tier
-    #: cannot prove and without the scan tier's two extra per-batch jobs.
-    #: Non-zero (an insert re-used an existing or tombstoned key) ⇒ one
-    #: narrow keys semi-join pinpoints the overlapping partitions, which
-    #: are rebuilt as written winners + a map-only broadcast anti-join
-    #: copy of the surviving incumbent rows (payload read once, written
-    #: once, never shuffled). Buckets with update/delete events take the
-    #: fused path unchanged: their targets overlap by construction, and
-    #: the survivor-rewrite detour measures SLOWER than the fused shuffle
-    #: at transcript payload widths (A/B in OPTIMIZATION_r06.md). Row
-    #: set, ledger and partition checksums are identical to the fused
-    #: path by construction — the whole narrow incumbent flows through
-    #: the same LWW window, so every stat observes the same rows (pinned
-    #: by the digest-equality tests in tests/test_two_stream.py). A
-    #: two-stream partition none of whose batch events win keeps its old
-    #: files verbatim (metadata carry-forward — a stale re-insert flood
-    #: rewrites nothing). Requires ``cow_append_fastpath`` (False must
-    #: keep forcing full rewrites, as documented there). The env override
-    #: ``SPARK_GRAFT_COW_TWO_STREAM=0`` exists for A/B measurement
-    #: against the fused path.
-    cow_two_stream: bool = field(
-        default_factory=lambda: os.environ.get("SPARK_GRAFT_COW_TWO_STREAM", "1")
-        != "0"
-    )
-
-    #: exact bucket→shuffle-partition placement for the fused COW merge
-    #: (operators/shards.py): repartition on a murmur3-preimage proxy of
-    #: ``pmod(p, n_shards)`` so every merge stage runs uniform waves of
-    #: exactly-placed tasks instead of the hash-collision + AQE-coalesced
-    #: 10–36 task shapes (guide §2.5). Placement only: same rows per
-    #: bucket, same window groups, same files (pinned in
-    #: tests/test_shards.py). DEFAULT OFF, measured: on warm local[32]
-    #: the AQE-sized exchange wins every order-alternated pair
-    #: (write+merge 14.0–14.9 s vs 15.6–18.1 s at 32/64/128 shards on
-    #: the 2 M × 8 bench workload) — staggered, size-aware tasks mask
-    #: this host's hypervisor steal better than synchronized uniform
-    #: waves, and extra tasks pay a fixed ~0.1 s deserialize cost.
-    #: ``SPARK_GRAFT_MERGE_SHARDS=1`` (or a shard count >1) opts in —
-    #: the shape to re-measure on a real cluster where shuffle blocks
-    #: cross a network and AQE coalescing targets MB-scale partitions.
-    merge_exact_shards: bool = field(
-        default_factory=lambda: os.environ.get("SPARK_GRAFT_MERGE_SHARDS", "0")
-        not in ("0", "")
-    )
-
-    #: a partition is two-stream-eligible only while its incumbent file
-    #: count is below this bound; at/above it the batch takes the fused
-    #: rewrite, which coalesces the partition back to one file. This is
-    #: the small-files backstop: each appended batch adds a file per
-    #: partition, so without the bound an endless interleaved-insert
-    #: stream would accumulate files monotonically (the round-5 verdict's
-    #: append-path concern — this tier self-bounds). 8 ≈ Iceberg-style
-    #: "compact every few commits" amortization.
-    cow_two_stream_max_files: int = 8
-
-    #: minimum total incumbent rows across the candidate partitions for
-    #: two-stream to engage. The clean insert case adds zero extra jobs,
-    #: so the default is 0 (always on); raise it to shield tiny tables
-    #: from the rare-overlap path's check + survivor jobs.
-    cow_two_stream_min_rows: int = 0
-
-    #: per-partition engagement ratio: a partition is two-stream-eligible
-    #: only when its incumbent rows are at least this multiple of the
-    #: batch rows landing in it. Appending necessarily produces one small
-    #: file per partition per batch; when the incumbent is only 1-4× the
-    #: batch (early bulk-load batches, small tables) the avoided rewrite
-    #: is worth less than the small-files tax every subsequent scan of
-    #: that partition pays — measured at bench shape (2 M × 8, 128
-    #: buckets): appends with ratio ≤ 4 cost +2-4 s per apply vs fused
-    #: (OPTIMIZATION_r06.md). At ratio ≥ 8 the rewrite is ≥ 8× the bytes
-    #: of the append and the trade flips — the long-running insert-stream
-    #: case (growing table, steady batch size) where each batch would
-    #: otherwise rewrite the whole partition. A data-shape breakeven, not
-    #: a core-count constant.
-    cow_two_stream_min_ratio: float = 8.0
+    #: The frozen benchmark harness (perfbench/run.py) still passes these
+    #: two retired knobs (the merge-proven append tier and exact shard
+    #: placement); they are accepted and ignored.
+    cow_two_stream: InitVar[bool] = True
+    merge_exact_shards: InitVar[bool] = False
 
     #: MOR classification join strategy gate: when the batch's VALID event
     #: count (an upper bound on its distinct key count, free from the
@@ -337,24 +234,21 @@ class EngineConfig:
     #: stored/observe/driver read-back, reverify, MOR compact, replay
     #: verify — hashes identically for the table's whole lifetime.
     #: "typed" (default): xxhash64 over native typed columns with typed
-    #: NULL sentinels (functions/digests.py:typed_row_digest) — no per-row
-    #: cast-strings or concat buffer, removing ~200 B of garbage per
-    #: written row from a merge stage measured at 46-73% JVM GC time
-    #: (BENCH/merge_stage_profile.py, BENCH/rowhash_probe.py: the
-    #: canonical form costs 0.25-0.3 s per 2 M rows before GC
-    #: amplification). "canonical": the original string-canonicalized
-    #: form — pre-existing tables (no ``rowhash_mode`` in their snapshot)
-    #: always read as canonical, so their manifests remain valid and
-    #: append-path xor-combines never mix definitions (the per-entry
-    #: ``ck_id`` additionally tags the mode). Checksums are an internal
-    #: integrity contract; no external system consumes their values.
-    rowhash_mode: str = field(
-        default_factory=lambda: os.environ.get("SPARK_GRAFT_ROWHASH", "typed")
-    )
+    #: NULL sentinels (functions/digests.py:typed_row_digest), with no
+    #: per-row cast-strings or concat buffer (~200 B of garbage per
+    #: written row in the GC-bound merge stage, BENCH/rowhash_probe.py).
+    #: "canonical": the original
+    #: string-canonicalized form. Snapshots without ``rowhash_mode``
+    #: (tables created before the mode existed) read as canonical, and the
+    #: per-entry ``ck_id`` tags the mode so append-path xor-combines never
+    #: mix definitions.
+    rowhash_mode: str = "typed"
 
     selected_metrics: set[str] = field(init=False, repr=False)
 
-    def __post_init__(self) -> None:
+    def __post_init__(
+        self, cow_two_stream: bool, merge_exact_shards: bool
+    ) -> None:
         if self.on_error not in ("quarantine", "fail"):
             raise ValueError(f"on_error must be quarantine|fail, got {self.on_error!r}")
         if self.write_mode not in ("cow", "mor"):
@@ -385,12 +279,6 @@ class EngineConfig:
             raise ValueError(
                 f"rowhash_mode must be typed|canonical, got {self.rowhash_mode!r}"
             )
-        if self.cow_two_stream_max_files < 1:
-            raise ValueError("cow_two_stream_max_files must be >= 1")
-        if self.cow_two_stream_min_rows < 0:
-            raise ValueError("cow_two_stream_min_rows must be >= 0")
-        if self.cow_two_stream_min_ratio < 0:
-            raise ValueError("cow_two_stream_min_ratio must be >= 0")
         if self.num_buckets < 1:
             raise ValueError("num_buckets must be >= 1")
         if self.mor_broadcast_key_limit < 0:

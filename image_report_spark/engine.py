@@ -30,13 +30,12 @@ Everything is DataFrame ops + window functions + Arrow-vectorized pandas
 from __future__ import annotations
 
 import os
-import sys
 import time
 import zlib
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, Row, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     IntegerType,
@@ -56,7 +55,6 @@ from image_report_spark.functions.digests import (
 )
 from image_report_spark.operators.evolution import reconcile_schema
 from image_report_spark.operators.resolve import resolve_lww_grouped
-from image_report_spark.operators.shards import shard_expr_sql
 from image_report_spark.operators.skew import detect_hot_keys, salt_hot_keys
 from image_report_spark.plans.checkpoint import Checkpoint
 from image_report_spark.plans.icelite import IceliteTable, partition_expr, PART_COL
@@ -290,15 +288,12 @@ class BatchReport:
     rows_after: int = 0
     partitions_touched: int = 0
     #: touched partitions taken by the copy-on-write append fast-path
-    #: (all-insert batch slice, zero key overlap with the incumbent —
+    #: (all-insert batch slice, key range disjoint from the incumbent's —
     #: incumbent files carried forward, stats xor-combined)
     partitions_appended: int = 0
-    #: rewrite partitions merged via the COW two-stream split (narrow
-    #: incumbent through the resolve window; survivors carried by a
-    #: map-only broadcast anti-join instead of the merge shuffle)
-    partitions_two_stream: int = 0
-    #: two-stream partitions where no batch event won — old files kept
-    #: verbatim (metadata carry-forward, nothing rewritten)
+    #: always 0 (no write path carries a touched partition forward
+    #: unchanged); kept because the frozen benchmark harness
+    #: (perfbench/spans.py) reads it
     partitions_carried: int = 0
     wall_ms: int = 0
     table_digest: str | None = None
@@ -316,10 +311,6 @@ class BatchReport:
         }
         if self.partitions_appended:
             base["partitions_appended"] = self.partitions_appended
-        if self.partitions_two_stream:
-            base["partitions_two_stream"] = self.partitions_two_stream
-        if self.partitions_carried:
-            base["partitions_carried"] = self.partitions_carried
         for k in (
             "events_read applied deduped superseded quarantined "
             "rows_before inserts updates deletes rows_after".split()
@@ -508,9 +499,9 @@ class CdcEngine:
                 # event time) append on metadata alone
                 F.min(F.when(~malformed, F.col("conv_id"))).alias("klo"),
                 F.max(F.when(~malformed, F.col("conv_id"))).alias("khi"),
-                # null merge keys: SQL equality never matches them (the scan
-                # tier would miss the overlap) yet the merge window groups
-                # them — buckets carrying any null key never fast-path
+                # null merge keys: the zone maps' min/max skip them, yet
+                # the merge window groups them with the incumbent's null
+                # keys — buckets carrying any null key never fast-path
                 F.sum(
                     F.when(
                         ~malformed
@@ -529,21 +520,18 @@ class CdcEngine:
         prepass_rows: list | None = None,
     ) -> BatchReport:
         t0 = time.monotonic()
-        _timing = os.environ.get("IRS_TIMING") == "1"
         _last = [t0]
         cfg = self.config
         rpt = BatchReport(batch_id=batch_id)
 
         # per-phase durations land in the ledger as a selectable metric
         # (graft of the reference's per-section duration_sec attributes,
-        # ir:218-221,347-353); IRS_TIMING=1 additionally echoes to stderr
+        # ir:218-221,347-353)
         def _tick(phase: str) -> None:
             now = time.monotonic()
             rpt.phase_ms[phase] = rpt.phase_ms.get(phase, 0) + int(
                 (now - _last[0]) * 1000
             )
-            if _timing:
-                print(f"# b{batch_id} {phase}: {now - _last[0]:.2f}s", file=sys.stderr)
             _last[0] = now
         snap = self.table.snapshot()
         logical = self.table.logical_schema(snap)
@@ -596,7 +584,6 @@ class CdcEngine:
         # and unpersisting a derived frame is a no-op (the cache would leak
         # across batches in a long run)
         events_pinned = None
-        lsn_pool = None
         if cfg.grouped_resolve or cfg.update_missing == "quarantine":
             events_pinned = events = events.persist()
         try:
@@ -633,14 +620,13 @@ class CdcEngine:
                 )
                 return rpt
 
-            pre_dropped_superseded = 0
-            pre_dropped_dups = 0
             if cfg.update_missing == "quarantine":
                 events, n_missing = self._quarantine_missing_updates(
                     events, num_buckets, batch_id
                 )
                 rpt.quarantined += n_missing
 
+            pre = None
             if cfg.grouped_resolve:
                 # applyInPandas per-conversation ordered apply (BASELINE.json:6)
                 # — pre-resolves within the batch; the fused merge below then
@@ -650,430 +636,232 @@ class CdcEngine:
                     F.count_distinct(F.col("lsn")).alias("nd"),
                 ).first()
                 hot = detect_hot_keys(events, threshold=cfg.hot_key_threshold)
-                resolved = resolve_lww_grouped(
+                events = resolve_lww_grouped(
                     salt_hot_keys(events, hot, n_salt=cfg.skew_salt)
                 ).drop("_salt")
-                pre_dropped_dups = int(pre["n"]) - int(pre["nd"])
-                pre_dropped_superseded = -pre_dropped_dups  # adjusted below
-                events = resolved
 
             if cfg.write_mode == "mor":
                 return self._mor_tail(
                     events, evolved, payload_cols, num_buckets, hot_buckets,
                     touched, old_entries, batch_id, rpt, _tick, t0,
                 )
-
-            # 4+5. FUSED resolve + COW merge: one wide shuffle on
-            # (bucket, salt); both dedup windows, the LWW ranking, the
-            # per-key liveness aggregate and the final write all run inside
-            # that partitioning (HashPartitioning on a subset of each
-            # window's clustering keys — Catalyst inserts sorts, never
-            # another exchange), so the data moves across the network once.
-            salt = (
-                F.when(
-                    F.col(PART_COL).isin(hot_buckets),
-                    F.pmod(F.xxhash64(F.col("conv_id"), F.col("turn_idx")), F.lit(cfg.skew_salt)).cast("int"),
-                ).otherwise(F.lit(0))
-                if hot_buckets
-                else F.lit(0)
+            return self._cow_tail(
+                events, evolved, payload_cols, num_buckets, hot_buckets,
+                touched, old_entries, bucket_rows, checksum_cols,
+                rowhash_mode, pre, batch_id, rpt, _tick, t0,
             )
-            # COW append fast-path: partitions whose batch slice is pure
-            # inserts with zero key overlap against the incumbent are
-            # APPENDED — their incumbents never enter the union (no read,
-            # no re-sort, no re-encode); manifest stats xor-combine below.
-            # The overlap check is a keys-only columnar scan (3 narrow
-            # columns) of candidate partitions semi-joined with the
-            # batch's keys; update/delete buckets skip it entirely.
-            ck_id = _checksum_cols_id(checksum_cols, rowhash_mode)
-            append_parts: set[int] = set()
-            if cfg.cow_append_fastpath:
-                insert_only = {
-                    int(r[PART_COL])
-                    for r in bucket_rows
-                    if int(r["noni"] or 0) == 0
+        finally:
+            if events_pinned is not None:
+                events_pinned.unpersist()
+
+    # --------------------------------------------------------- copy-on-write
+    def _cow_tail(
+        self,
+        events: DataFrame,
+        evolved: StructType,
+        payload_cols: list[str],
+        num_buckets: int,
+        hot_buckets: list[int],
+        touched: list[int],
+        old_entries: dict,
+        bucket_rows: list,
+        checksum_cols: list[str],
+        rowhash_mode: str,
+        pre: Row | None,
+        batch_id: int,
+        rpt: BatchReport,
+        _tick,
+        t0: float,
+    ) -> BatchReport:
+        """Copy-on-write write path (``EngineConfig.write_mode='cow'``).
+
+        FUSED resolve + merge: one wide shuffle on (bucket, salt); both
+        dedup windows, the LWW ranking, the per-key liveness aggregate and
+        the final write all run inside that partitioning (HashPartitioning
+        on a subset of each window's clustering keys — Catalyst inserts
+        sorts, never another exchange), so the data moves across the
+        network once. Every touched partition is rewritten, except the
+        append fast-path's (``EngineConfig.cow_append_fastpath``), whose
+        incumbent files carry forward. ``pre`` is the grouped pre-resolve's
+        ``(n, nd)`` count row (None on the window-resolver path).
+        """
+        cfg = self.config
+        salt = (
+            F.when(
+                F.col(PART_COL).isin(hot_buckets),
+                F.pmod(F.xxhash64(F.col("conv_id"), F.col("turn_idx")), F.lit(cfg.skew_salt)).cast("int"),
+            ).otherwise(F.lit(0))
+            if hot_buckets
+            else F.lit(0)
+        )
+        # COW append fast-path: a partition whose batch slice is pure
+        # inserts with a key range strictly disjoint from the entry's
+        # stored zone map (prepass range vs manifest — zero extra jobs) is
+        # APPENDED: its incumbent never enters the union (no read, no
+        # re-sort, no re-encode); manifest stats xor-combine below. NULL
+        # merge keys disqualify a bucket: min/max skip them, yet the merge
+        # window groups them with the incumbent's NULL keys.
+        ck_id = _checksum_cols_id(checksum_cols, rowhash_mode)
+        append_parts: set[int] = set()
+        if cfg.cow_append_fastpath:
+            for r in bucket_rows:
+                e = old_entries.get(int(r[PART_COL]))
+                if (
+                    int(r["noni"] or 0) == 0
                     and int(r["nullk"] or 0) == 0
                     and int(r["n"]) - int(r["bad"] or 0) > 0
-                }
-                cand = [
-                    p
-                    for p in touched
-                    if p in insert_only
-                    and (e := old_entries.get(p)) is not None
+                    and e is not None
                     and e.get("files")
                     and not e.get("delta_files")
                     and e.get("checksum") is not None
                     and e.get("ck_id") == ck_id
-                ]
-                # tier 1 — METADATA: the batch bucket's key range (from the
-                # prepass) vs the entry's stored zone map. Strictly disjoint
-                # conv_id ranges ⇒ keys disjoint ⇒ append, zero extra jobs.
-                bucket_range = {
-                    int(r[PART_COL]): (r["klo"], r["khi"]) for r in bucket_rows
-                }
-                for p in list(cand):
-                    e = old_entries[p]
-                    lo, hi = e.get("key_lo"), e.get("key_hi")
-                    blo, bhi = bucket_range.get(p, (None, None))
-                    if (
-                        lo is not None
-                        and hi is not None
-                        and blo is not None
-                        and bhi is not None
-                        and (bhi < lo or blo > hi)
-                    ):
-                        append_parts.add(p)
-                        cand.remove(p)
-                # tier 2 — SCAN: remaining candidates get the keys-only
-                # columnar scan + semi-join (range overlap is NOT key
-                # overlap: interleaved-but-distinct keys still append
-                # here). Ratio-gated: only worth two extra jobs when the
-                # avoided rewrite is a large multiple of the appended rows.
-                scan_ratio = cfg.cow_append_scan_min_ratio
-                if scan_ratio is None:
-                    cand = []
-                elif cand:
-                    inc_rows = sum(
-                        int(old_entries[p]["row_count"]) for p in cand
+                    and all(
+                        v is not None
+                        for v in (e.get("key_lo"), e.get("key_hi"), r["klo"], r["khi"])
                     )
-                    cand_rows = sum(
-                        int(r["n"]) - int(r["bad"] or 0)
-                        for r in bucket_rows
-                        if int(r[PART_COL]) in set(cand)
-                    )
-                    if inc_rows < scan_ratio * max(cand_rows, 1):
-                        cand = []
-                if cand:
-                    from image_report_spark.plans.icelite import physical_schema
-
-                    phys = physical_schema(evolved)
-                    key_fields = {PART_COL, "conv_id", "turn_idx"}
-                    narrow = StructType(
-                        [f for f in phys.fields if f.name in key_fields]
-                    )
-                    cand_set = set(cand)
-                    cand_files = [
-                        os.path.join(self.table.root, f)
-                        for p in cand
-                        for f in old_entries[p]["files"]
-                    ]
-                    # ALL incumbent rows count as overlap — including
-                    # tombstones, so an appended partition never holds two
-                    # physical rows for one key
-                    inc_keys = self.spark.read.schema(narrow).parquet(*cand_files)
-                    # key source is the PRE-dedup `good` frame, not `events`:
-                    # recomputing the boundary/anti-join lineage here would
-                    # cost an extra shuffle + checkpoint read, and a replayed
-                    # event's key exists in the incumbent by definition — it
-                    # classifies its bucket as a rewrite, which is exactly
-                    # where replay detection needs the incumbent rows anyway.
-                    # No distinct(): a semi-join probe side needs no dedup.
-                    bkeys = (
-                        good.withColumn(PART_COL, partition_expr(num_buckets))
-                        .filter(F.col(PART_COL).isin(cand))
-                        .select(PART_COL, "conv_id", "turn_idx")
-                    )
-                    n_cand_events = sum(
-                        int(r["n"]) - int(r["bad"] or 0)
-                        for r in bucket_rows
-                        if int(r[PART_COL]) in cand_set
-                    )
-                    # same broadcast size gate as the MOR classification:
-                    # bulk loads degrade to a shuffled semi-join instead of
-                    # blowing the broadcast limit
-                    if n_cand_events <= cfg.mor_broadcast_key_limit:
-                        bkeys = F.broadcast(bkeys)
-                    matched = {
-                        int(r[PART_COL])
-                        for r in inc_keys.join(
-                            bkeys, [PART_COL, "conv_id", "turn_idx"], "left_semi"
-                        )
-                        .select(PART_COL)
-                        .distinct()
-                        .collect()
-                    }
-                    append_parts |= cand_set - matched
-                    _tick("classify")
-                rpt.partitions_appended = len(append_parts)
-            rewrite_parts = [p for p in touched if p not in append_parts]
-            # COW two-stream split (guide §2.2, shuffle fewer bytes — see
-            # EngineConfig.cow_two_stream): a rewrite partition whose batch
-            # slice is PURE INSERTS contributes only NARROW incumbent rows
-            # (merge keys + ts/lsn/op) to the merge shuffle, and the merge
-            # itself then proves key-disjointness (observed `displaced`
-            # counter): if no insert won over an incumbent row, the winner
-            # file APPENDS and the incumbent files carry forward — the
-            # append fast-path outcome for interleaved key ranges the
-            # zone-map tier cannot prove, at zero extra jobs. Buckets with
-            # update/delete events stay fused (their targets overlap by
-            # construction, and the measured survivor-rewrite detour costs
-            # more than the fused shuffle it avoids at this payload width),
-            # as do buckets whose batch slice carries null merge keys (SQL
-            # join equality would miss the null-key groups the window
-            # resolves), partitions at the file-count bound (the fused
-            # rewrite coalesces them back to one file) and pre-ck_id
-            # manifests.
-            bucket_info = {int(r[PART_COL]): r for r in bucket_rows}
-            ts_parts: list[int] = []
-            if cfg.cow_two_stream and cfg.cow_append_fastpath and rewrite_parts:
-                cand_ts = [
-                    p
-                    for p in rewrite_parts
-                    if (e := old_entries.get(p)) is not None
-                    and e.get("files")
-                    and len(e["files"]) < cfg.cow_two_stream_max_files
-                    and e.get("checksum") is not None
-                    and e.get("ck_id") == ck_id
-                    and int(bucket_info[p]["nullk"] or 0) == 0
-                    and int(bucket_info[p]["noni"] or 0) == 0
-                    and int(e["row_count"])
-                    >= cfg.cow_two_stream_min_ratio
-                    * max(
-                        int(bucket_info[p]["n"])
-                        - int(bucket_info[p]["bad"] or 0),
-                        1,
-                    )
-                ]
-                n_ts_events = sum(
-                    int(bucket_info[p]["n"]) - int(bucket_info[p]["bad"] or 0)
-                    for p in cand_ts
-                )
-                n_ts_inc = sum(int(old_entries[p]["row_count"]) for p in cand_ts)
-                if (
-                    cand_ts
-                    and n_ts_events <= cfg.mor_broadcast_key_limit
-                    and n_ts_inc >= cfg.cow_two_stream_min_rows
+                    and (r["khi"] < e["key_lo"] or r["klo"] > e["key_hi"])
                 ):
-                    ts_parts = cand_ts
-            ts_set = set(ts_parts)
-            fused_parts = [p for p in rewrite_parts if p not in ts_set]
-            rpt.partitions_two_stream = len(ts_parts)
-            incumbent = self._read_physical(fused_parts, evolved).withColumn(
-                "_src", F.lit(0)
-            )
-            if ts_parts:
-                # narrow branch: the resolve window needs only the merge
-                # keys and the LWW order columns; null literals on the rest
-                # prune the payload column chunks out of the parquet scan
-                field_types = {f.name: f.dataType for f in evolved.fields}
-                key_or_order = {"conv_id", "turn_idx", "ts"}
-                narrow_inc = (
-                    self._read_physical(ts_parts, evolved)
-                    .select(
-                        F.col(PART_COL),
-                        *[
-                            F.col(c)
-                            if c in key_or_order
-                            else F.lit(None).cast(field_types[c]).alias(c)
-                            for c in payload_cols
-                        ],
-                        "_lsn",
-                        "_op",
-                    )
-                    .withColumn("_src", F.lit(0))
-                )
-                incumbent = incumbent.unionByName(narrow_inc)
-            # one selectExpr instead of withColumn+select+withColumn: the
-            # merge construction repeats per batch, so driver round-trips
-            # are a per-batch tax (the SQL text parses to the identical
-            # expressions — partition_expr's pmod/xxhash64/cast)
-            evt = events.selectExpr(
-                f"cast(pmod(xxhash64(conv_id), {num_buckets}) as int) AS {PART_COL}",
-                *[f"`{c}`" for c in payload_cols],
-                "lsn AS _lsn",
-                "op AS _op",
-                "1 AS _src",
-            )
+                    append_parts.add(int(r[PART_COL]))
+            rpt.partitions_appended = len(append_parts)
+        rewrite_parts = [p for p in touched if p not in append_parts]
+        incumbent = self._read_physical(rewrite_parts, evolved).withColumn(
+            "_src", F.lit(0)
+        )
+        # one selectExpr instead of withColumn+select+withColumn: the
+        # merge construction repeats per batch, so driver round-trips
+        # are a per-batch tax (the SQL text parses to the identical
+        # expressions — partition_expr's pmod/xxhash64/cast)
+        evt = events.selectExpr(
+            f"cast(pmod(xxhash64(conv_id), {num_buckets}) as int) AS {PART_COL}",
+            *[f"`{c}`" for c in payload_cols],
+            "lsn AS _lsn",
+            "op AS _op",
+            "1 AS _src",
+        )
 
-            # repartition on _salt only when it's a real column: a lit(0)
-            # salt constant-folds OUT of the window's required clustering
-            # but NOT out of hashpartitioning, which would defeat the
-            # subset-satisfaction rule and buy a second Exchange
-            # (asserted in tests/test_plans.py)
-            u = incumbent.unionByName(evt).withColumn("_salt", salt)
-            use_shards = cfg.merge_exact_shards and not hot_buckets
-            if use_shards:
-                # exact bucket→partition placement (operators/shards.py):
-                # bucket p lands in shuffle partition p mod n_shards, so the
-                # merge stage is one full-width wave of uniform tasks —
-                # width from defaultParallelism at runtime, capped by
-                # num_buckets (the table's own scale knob), never a local
-                # core constant. The explicit count keeps AQE from re-
-                # cutting the stage to a size-based task count (measured:
-                # 10–36 tasks on 32 cores with collision skew).
-                override = int(os.environ.get("SPARK_GRAFT_MERGE_SHARDS", "0"))
-                n_shards = max(
-                    1,
-                    min(
-                        num_buckets,
-                        # wave-count A/B override: >1 forces that shard count
-                        override
-                        if override > 1
-                        else self.spark.sparkContext.defaultParallelism,
-                    ),
-                )
-                u = u.selectExpr(
-                    "*", f"{shard_expr_sql(PART_COL, n_shards)} AS _shard"
-                ).repartition(n_shards, F.col("_shard"))
-            else:
-                # salted hot buckets keep the AQE-sized exchange: the salt
-                # already spreads the hot bucket, and the shard proxy would
-                # need (bucket, salt)-pair placement to beat it
-                repart_cols = [F.col(PART_COL)] + (
-                    [F.col("_salt")] if hot_buckets else []
-                )
-                # no explicit partition count: AQE sizes/coalesces the
-                # exchange; parallelism comes from #buckets × salt, so
-                # num_buckets (not shuffle.partitions) is the scale knob
-                u = u.repartition(*repart_cols)
-            # ONE window sort serves everything: within a key, rows sharing
-            # an LSN (exact replays — byte-identical; an idempotent re-apply
-            # pairs the event with its incumbent) sort adjacently, so replay
-            # detection is a lag() in the SAME (partition, order) spec as the
-            # LWW row_number — a single WindowExec, a single sort. The
-            # per-key liveness max() needs only the clustering prefix, so it
-            # rides the same sort too. (Graft of the NMS duplicate
-            # suppression, utils.py:270-319.)
-            # (built as SQL text — one driver round-trip for the whole
-            # window block instead of one per Column; parses to the same
-            # WindowExec, pinned by the single-exchange plan test)
-            # `_shard` is a pure function of `_p`, so prepending it to the
-            # window partition keys changes no group; it is there solely so
-            # hashpartitioning(_shard) satisfies the window's clustering
-            # (the subset rule) without a second Exchange
-            shard_pfx = "_shard, " if use_shards else ""
-            part_spec = f"PARTITION BY {shard_pfx}{PART_COL}, _salt, conv_id, turn_idx"
-            order_spec = (
-                f"{part_spec} ORDER BY ts DESC NULLS LAST, "
-                "_lsn DESC NULLS LAST, _src ASC"  # exact tie → incumbent wins
-            )
-            win_exprs = [
-                f"row_number() OVER ({order_spec}) AS _rn",
-                f"if(lag(_lsn) OVER ({order_spec}) <=> _lsn, 1, 0) AS _replay",
-                f"max(if(_src = 0 AND _op <> 'D', 1, 0)) OVER ({part_spec}) AS _inc_live",
-            ]
-            if ts_parts:
-                # merge-proven append needs "did ANY incumbent row (live OR
-                # tombstone) share this key" — tombstones must count as
-                # overlap so an appended partition never holds two physical
-                # rows for one key. Same window frame, no extra sort.
-                win_exprs.append(
-                    f"max(if(_src = 0, 1, 0)) OVER ({part_spec}) AS _inc_any"
-                )
-            ranked = u.selectExpr("*", *win_exprs)
-            # deliberately NOT cached: caching wide string rows is a GC bomb
-            # (measured: 120 s GC in one 64-task stage); instead the pipeline
-            # runs exactly once — inside the file write — with ledger stats
-            # collected by observe() on that same job, and partition stats
-            # computed either by a second observation riding that same job
-            # (tier 1) or from a NARROW fixed-width read-back of the freshly
-            # written files (tier 2, which persists the pipeline-computed
-            # per-row hash `_h` alongside `_salt`; partstats_mode="reverify"
-            # instead re-hashes the on-disk payload bytes as a bit-level
-            # integrity check)
-            obs = Observation(f"batch-{batch_id}")
-            # one parsed SQL expression per aggregate (vs ~6 driver
-            # round-trips per Column build); `_src = 1 AND _rn = 1` is the
-            # "winning event row" predicate throughout
-            obs_exprs = [
-                "sum(if(_src = 1 AND _rn = 1, 1, 0)) AS applied",
-                "sum(if(_src = 1 AND _replay = 1, 1, 0)) AS dups",
-                "sum(if(_src = 1 AND _replay = 0 AND _rn > 1, 1, 0)) AS superseded",
-                "sum(if(_src = 1 AND _rn = 1 AND _op IN ('I', 'U') AND _inc_live = 0, 1, 0)) AS ins",
-                "sum(if(_src = 1 AND _rn = 1 AND _op IN ('I', 'U') AND _inc_live = 1, 1, 0)) AS upd",
-                "sum(if(_src = 1 AND _rn = 1 AND _op = 'D' AND _inc_live = 1, 1, 0)) AS `del`",
-                "sum(if(_rn = 1 AND _op <> 'D', 1, 0)) AS live_after",
-                "max(if(_src = 1, _lsn, null)) AS mx",
-                # op histogram folded into the SAME observation (3 more
-                # conditional sums on the one pipeline execution) — the old
-                # groupBy recompute re-ran the entire uncached merge when
-                # metrics=all
-                *[
-                    f"sum(if(_src = 1 AND _replay = 0 AND _op = '{o}', 1, 0)) AS op_{o}"
-                    for o in ("I", "U", "D")
-                ],
-            ]
-            if ts_parts:
-                # merge-proven append: count batch winners that displaced an
-                # existing incumbent key in a two-stream partition. Zero ⇒
-                # every two-stream winner file is key-disjoint from its
-                # incumbent and appends with no further jobs; non-zero ⇒ a
-                # narrow keys semi-join pinpoints which partitions overlap.
-                ids = ", ".join(str(p) for p in ts_parts)
-                obs_exprs.append(
-                    "sum(if(_src = 1 AND _rn = 1 AND _inc_any = 1 AND "
-                    f"{PART_COL} IN ({ids}), 1, 0)) AS displaced"
-                )
-            ranked_obs = ranked.observe(obs, *[F.expr(s) for s in obs_exprs])
-            keep = F.col("_rn") == 1
-            if ts_parts:
-                # two-stream partitions: this job writes only the batch's
-                # winning rows; narrow incumbent winners exist solely to
-                # decide per-key outcomes and feed the observation (their
-                # payload is carried by the survivor pass below)
-                keep = keep & (
-                    (F.col("_src") == 1) | ~F.col(PART_COL).isin(ts_parts)
-                )
-            merged = ranked_obs.filter(keep)
+        # repartition on _salt only when it's a real column: a lit(0)
+        # salt constant-folds OUT of the window's required clustering
+        # but NOT out of hashpartitioning, which would defeat the
+        # subset-satisfaction rule and buy a second Exchange
+        # (asserted in tests/test_plans.py). No explicit partition count:
+        # AQE sizes/coalesces the exchange; parallelism comes from
+        # #buckets × salt, so num_buckets (not shuffle.partitions) is the
+        # scale knob.
+        u = incumbent.unionByName(evt).withColumn("_salt", salt)
+        u = u.repartition(
+            *([F.col(PART_COL)] + ([F.col("_salt")] if hot_buckets else []))
+        )
+        # ONE window sort serves everything: within a key, rows sharing
+        # an LSN (exact replays — byte-identical; an idempotent re-apply
+        # pairs the event with its incumbent) sort adjacently, so replay
+        # detection is a lag() in the SAME (partition, order) spec as the
+        # LWW row_number — a single WindowExec, a single sort. The
+        # per-key liveness max() needs only the clustering prefix, so it
+        # rides the same sort too. (Graft of the NMS duplicate
+        # suppression, utils.py:270-319.)
+        # (built as SQL text — one driver round-trip for the whole
+        # window block instead of one per Column; parses to the same
+        # WindowExec, pinned by the single-exchange plan test)
+        part_spec = f"PARTITION BY {PART_COL}, _salt, conv_id, turn_idx"
+        order_spec = (
+            f"{part_spec} ORDER BY ts DESC NULLS LAST, "
+            "_lsn DESC NULLS LAST, _src ASC"  # exact tie → incumbent wins
+        )
+        ranked = u.selectExpr(
+            "*",
+            f"row_number() OVER ({order_spec}) AS _rn",
+            f"if(lag(_lsn) OVER ({order_spec}) <=> _lsn, 1, 0) AS _replay",
+            f"max(if(_src = 0 AND _op <> 'D', 1, 0)) OVER ({part_spec}) AS _inc_live",
+        )
+        # deliberately NOT cached: caching wide string rows is a GC bomb
+        # (measured: 120 s GC in one 64-task stage); instead the pipeline
+        # runs exactly once — inside the file write — with ledger stats
+        # collected by observe() on that same job, and partition stats
+        # computed either by a second observation riding that same job
+        # (tier 1) or from a NARROW fixed-width read-back of the freshly
+        # written files (tier 2, which persists the pipeline-computed
+        # per-row hash `_h` alongside `_salt`; partstats_mode="reverify"
+        # instead re-hashes the on-disk payload bytes as a bit-level
+        # integrity check)
+        obs = Observation(f"batch-{batch_id}")
+        # one parsed SQL expression per aggregate (vs ~6 driver
+        # round-trips per Column build); `_src = 1 AND _rn = 1` is the
+        # "winning event row" predicate throughout
+        obs_exprs = [
+            "sum(if(_src = 1 AND _rn = 1, 1, 0)) AS applied",
+            "sum(if(_src = 1 AND _replay = 1, 1, 0)) AS dups",
+            "sum(if(_src = 1 AND _replay = 0 AND _rn > 1, 1, 0)) AS superseded",
+            "sum(if(_src = 1 AND _rn = 1 AND _op IN ('I', 'U') AND _inc_live = 0, 1, 0)) AS ins",
+            "sum(if(_src = 1 AND _rn = 1 AND _op IN ('I', 'U') AND _inc_live = 1, 1, 0)) AS upd",
+            "sum(if(_src = 1 AND _rn = 1 AND _op = 'D' AND _inc_live = 1, 1, 0)) AS `del`",
+            "sum(if(_rn = 1 AND _op <> 'D', 1, 0)) AS live_after",
+            "max(if(_src = 1, _lsn, null)) AS mx",
+            # op histogram folded into the SAME observation (3 more
+            # conditional sums on the one pipeline execution) — the old
+            # groupBy recompute re-ran the entire uncached merge when
+            # metrics=all
+            *[
+                f"sum(if(_src = 1 AND _replay = 0 AND _op = '{o}', 1, 0)) AS op_{o}"
+                for o in ("I", "U", "D")
+            ],
+        ]
+        merged = ranked.observe(obs, *[F.expr(s) for s in obs_exprs]).filter(
+            F.col("_rn") == 1
+        )
 
-            # 6. write files FIRST (the one and only pipeline execution;
-            # unreferenced until the snapshot commit below). `_salt` rides
-            # along so the window's output ordering satisfies the write sort
-            # (projecting it away would truncate the known ordering and
-            # force a second full sort)
-            phys_cols = [PART_COL] + payload_cols + ["_lsn", "_op"]
-            # partition-stats tier 1: when the touched set is small enough,
-            # the per-partition lineage aggregates (count / live / max LSN /
-            # bit_xor checksum) ride the WRITE JOB as a second observation —
-            # 4 conditional aggregates per touched partition, zero extra
-            # Spark job, zero read-back bytes, and the per-row hash `_h` is
-            # DROPPED before the write (an incompressible 8 bytes/row that
-            # only the tier-2 read-back would consume). Above the limit the
-            # narrow fixed-width file read-back (tier 2) keeps the plan size
-            # O(1) and persists `_h` for its own scan; "reverify" skips the
-            # pipeline hash entirely and re-hashes the on-disk payloads.
-            use_pobs = (
-                cfg.partstats_mode == "stored"
-                and 0 < len(touched) <= cfg.partstats_observe_limit
+        # write files FIRST (the one and only pipeline execution;
+        # unreferenced until the snapshot commit below). `_salt` rides
+        # along so the window's output ordering satisfies the write sort
+        # (projecting it away would truncate the known ordering and
+        # force a second full sort)
+        phys_cols = [PART_COL] + payload_cols + ["_lsn", "_op", "_salt"]
+        # partition-stats tier 1: when the touched set is small enough,
+        # the per-partition lineage aggregates (count / live / max LSN /
+        # bit_xor checksum) ride the WRITE JOB as a second observation —
+        # 4 conditional aggregates per touched partition, zero extra
+        # Spark job, zero read-back bytes, and the per-row hash `_h` is
+        # DROPPED before the write (an incompressible 8 bytes/row that
+        # only the tier-2 read-back would consume). Above the limit the
+        # narrow fixed-width file read-back (tier 2) keeps the plan size
+        # O(1) and persists `_h` for its own scan; "reverify" skips the
+        # pipeline hash entirely and re-hashes the on-disk payloads.
+        use_pobs = (
+            cfg.partstats_mode == "stored"
+            and 0 < len(touched) <= cfg.partstats_observe_limit
+        )
+        if cfg.partstats_mode == "reverify":
+            to_write = merged.select(*phys_cols)
+        else:
+            to_write = merged.withColumn(
+                "_h", _live_row_hash(merged, checksum_cols, rowhash_mode)
+            ).select(*(phys_cols + ["_h"]))
+        if use_pobs:
+            pobs = Observation(f"pstats-{batch_id}")
+            # ONE named_struct expression (single py4j call, parsed
+            # JVM-side) — 4 aggregates per touched partition as Column
+            # objects would add ~100s of py4j round-trips per batch to
+            # the plan phase, the very driver overhead being removed
+            entries = ", ".join(
+                f"'n_{p}', sum(if({PART_COL} = {p}, 1, 0)), "
+                f"'l_{p}', sum(if({PART_COL} = {p} and _op <> 'D', 1, 0)), "
+                f"'m_{p}', max(if({PART_COL} = {p}, _lsn, null)), "
+                f"'x_{p}', bit_xor(if({PART_COL} = {p}, _h, null)), "
+                f"'a_{p}', min(if({PART_COL} = {p}, conv_id, null)), "
+                f"'b_{p}', max(if({PART_COL} = {p}, conv_id, null))"
+                for p in touched
             )
-            # `_shard` rides to the writer like `_salt` (constant per file →
-            # RLE'd to ~nothing, invisible to the schema-projected reads):
-            # dropping it would truncate the window's known output ordering
-            # at its leading key and force a second full sort per batch
-            extra_cols = ["_salt"] + (["_shard"] if use_shards else [])
-            if cfg.partstats_mode == "reverify":
-                to_write = merged.select(*(phys_cols + extra_cols))
-            else:
-                to_write = merged.withColumn(
-                    "_h", _live_row_hash(merged, checksum_cols, rowhash_mode)
-                ).select(*(phys_cols + extra_cols + ["_h"]))
-            if use_pobs:
-                pobs = Observation(f"pstats-{batch_id}")
-                # ONE named_struct expression (single py4j call, parsed
-                # JVM-side) — 4 aggregates per touched partition as Column
-                # objects would add ~100s of py4j round-trips per batch to
-                # the plan phase, the very driver overhead being removed
-                entries = ", ".join(
-                    f"'n_{p}', sum(if({PART_COL} = {p}, 1, 0)), "
-                    f"'l_{p}', sum(if({PART_COL} = {p} and _op <> 'D', 1, 0)), "
-                    f"'m_{p}', max(if({PART_COL} = {p}, _lsn, null)), "
-                    f"'x_{p}', bit_xor(if({PART_COL} = {p}, _h, null)), "
-                    f"'a_{p}', min(if({PART_COL} = {p}, conv_id, null)), "
-                    f"'b_{p}', max(if({PART_COL} = {p}, conv_id, null))"
-                    for p in touched
-                )
-                to_write = to_write.observe(
-                    pobs, F.expr(f"named_struct({entries})").alias("pstats")
-                ).drop("_h")
-            _tick("plan")
-            # the dedup-window LSN set is independent of the merge output,
-            # so its (job-overhead-dominated) Parquet write is submitted
-            # BEFORE the big write job and backfills idle cores during the
-            # merge's stragglers/tail (guide-§2.6 overlap; previously it
-            # only overlapped the short partition-stats read-back, leaving
-            # most of its wall on the critical path). The commit marker is
-            # still only written after BOTH complete — crash semantics
-            # unchanged: marker exists ⇒ dedup state is on disk.
-            lsn_pool = ThreadPoolExecutor(max_workers=1)
+            to_write = to_write.observe(
+                pobs, F.expr(f"named_struct({entries})").alias("pstats")
+            ).drop("_h")
+        _tick("plan")
+        # the dedup-window LSN set is independent of the merge output,
+        # so its (job-overhead-dominated) Parquet write is submitted
+        # BEFORE the big write job and backfills idle cores during the
+        # merge's stragglers/tail (guide-§2.6 overlap). The commit marker
+        # is still only written after BOTH complete — crash semantics
+        # unchanged: marker exists ⇒ dedup state is on disk.
+        lsn_pool = ThreadPoolExecutor(max_workers=1)
+        try:
             lsn_fut = lsn_pool.submit(
                 self.checkpoint.write_seen_lsns, batch_id, events.select("lsn")
             )
@@ -1083,176 +871,28 @@ class CdcEngine:
             stats = obs.get
             _tick("write+merge")
 
-            # two-stream survivor pass: incumbent rows of two-stream
-            # partitions whose key was NOT won by the batch are copied
-            # forward by a map-only scan + broadcast anti-join on the
-            # freshly written winners' keys — payload bytes are read once
-            # and written once, never shuffled or window-sorted. A
-            # two-stream partition with NO winner file is untouched by the
-            # batch (every event replayed/superseded): its old files and
-            # manifest entry carry forward verbatim, rewriting nothing.
-            pobs2 = None
-            ts_rewrite: list[int] = []
-            surv_parts: list[int] = []
-            if ts_parts:
-                ts_rewrite = [p for p in ts_parts if p in files]
-                rpt.partitions_carried = len(ts_parts) - len(ts_rewrite)
-                if ts_rewrite:
-                    from image_report_spark.plans.icelite import physical_schema
-
-                    phys = physical_schema(evolved)
-                    key_schema = StructType(
-                        [
-                            f
-                            for f in phys.fields
-                            if f.name in (PART_COL, "conv_id", "turn_idx")
-                        ]
-                    )
-
-                    def _won_keys(parts: list[int]):
-                        return self.spark.read.schema(key_schema).parquet(
-                            *[
-                                os.path.join(self.table.root, f)
-                                for p in parts
-                                for f in files[p]
-                            ]
-                        )
-
-                    # post-merge APPEND decision: a partition where no winner
-                    # key matches any incumbent key needs no survivor rewrite
-                    # at all — old files carry forward and the winner file
-                    # appends (stats xor-combine below, exactly the append
-                    # fast-path manifest math). The merge window already
-                    # resolved every key collision and its observation
-                    # counted them (`displaced`): zero ⇒ ALL two-stream
-                    # partitions append with no further jobs (the common
-                    # insert-stream case); non-zero ⇒ one narrow keys
-                    # semi-join pinpoints which partitions overlap (re-insert
-                    # of an existing or tombstoned key).
-                    append2: set[int] = set()
-                    if int(stats["displaced"] or 0) == 0:
-                        append2 = set(ts_rewrite)
-                    else:
-                        inc_keys = self.spark.read.schema(key_schema).parquet(
-                            *[
-                                os.path.join(self.table.root, f)
-                                for p in ts_rewrite
-                                for f in old_entries[p]["files"]
-                            ]
-                        )
-                        overlapped = {
-                            int(r[PART_COL])
-                            for r in inc_keys.join(
-                                F.broadcast(_won_keys(ts_rewrite)),
-                                [PART_COL, "conv_id", "turn_idx"],
-                                "left_semi",
-                            )
-                            .select(PART_COL)
-                            .distinct()
-                            .collect()
-                        }
-                        append2 = set(ts_rewrite) - overlapped
-                    append_parts |= append2
-                    rpt.partitions_appended += len(append2)
-                    surv_parts = [p for p in ts_rewrite if p not in append2]
-                    if surv_parts:
-                        surv = (
-                            self.spark.read.schema(phys)
-                            .parquet(
-                                *[
-                                    os.path.join(self.table.root, f)
-                                    for p in surv_parts
-                                    for f in old_entries[p]["files"]
-                                ]
-                            )
-                            .join(
-                                F.broadcast(_won_keys(surv_parts)),
-                                [PART_COL, "conv_id", "turn_idx"],
-                                "left_anti",
-                            )
-                        )
-                        if cfg.partstats_mode != "reverify":
-                            surv = surv.withColumn(
-                                "_h", _live_row_hash(surv, checksum_cols, rowhash_mode)
-                            )
-                        if use_pobs:
-                            pobs2 = Observation(f"pstats2-{batch_id}")
-                            entries2 = ", ".join(
-                                f"'n_{p}', sum(if({PART_COL} = {p}, 1, 0)), "
-                                f"'l_{p}', sum(if({PART_COL} = {p} and _op <> 'D', 1, 0)), "
-                                f"'m_{p}', max(if({PART_COL} = {p}, _lsn, null)), "
-                                f"'x_{p}', bit_xor(if({PART_COL} = {p}, _h, null)), "
-                                f"'a_{p}', min(if({PART_COL} = {p}, conv_id, null)), "
-                                f"'b_{p}', max(if({PART_COL} = {p}, conv_id, null))"
-                                for p in surv_parts
-                            )
-                            surv = surv.observe(
-                                pobs2,
-                                F.expr(f"named_struct({entries2})").alias("pstats"),
-                            )
-                        surv_files = self.table.write_partition_files(
-                            surv, batch_id, pre_partitioned=True
-                        )
-                        for p, fl in surv_files.items():
-                            files[p] = files.get(p, []) + fl
-                _tick("survivors")
-
             # per-partition lineage: already collected by the write job's
             # observation (tier 1), else a narrow scan of the written files
             # ("stored" tier 2) or a full payload re-hash ("reverify")
             if use_pobs:
                 pv = pobs.get["pstats"]
-                # two-stream partitions combine the write job's winner
-                # stats with the survivor pass's observation: counts add,
-                # max/min/max compose, and bit_xor checksums xor-combine
-                # (order-independent by construction)
-                pv2 = pobs2.get["pstats"] if pobs2 is not None else None
-                ts_rw_set = set(surv_parts)
-
-                def _pair(fld: str, p: int):
-                    a = pv[f"{fld}_{p}"]
-                    b = (
-                        pv2[f"{fld}_{p}"]
-                        if pv2 is not None and p in ts_rw_set
-                        else None
-                    )
-                    return a, b
-
-                part_rows = []
-                for p in touched:
-                    if p not in files:
-                        continue
-                    n1, n2 = _pair("n", p)
-                    l1, l2 = _pair("l", p)
-                    m1, m2 = _pair("m", p)
-                    x1, x2 = _pair("x", p)
-                    a1, a2 = _pair("a", p)
-                    b1, b2 = _pair("b", p)
-                    part_rows.append(
-                        {
-                            PART_COL: p,
-                            "row_count": int(n1 or 0) + int(n2 or 0),
-                            "live_rows": int(l1 or 0) + int(l2 or 0),
-                            "last_applied_lsn": max(
-                                (v for v in (m1, m2) if v is not None),
-                                default=None,
-                            ),
-                            # match F.lpad(F.hex(bigint)): unsigned 64-bit,
-                            # uppercase, zero-padded to 16
-                            "checksum": format(
-                                ((x1 or 0) ^ (x2 or 0)) & 0xFFFFFFFFFFFFFFFF,
-                                "016X",
-                            ),
-                            "key_lo": min(
-                                (v for v in (a1, a2) if v is not None),
-                                default=None,
-                            ),
-                            "key_hi": max(
-                                (v for v in (b1, b2) if v is not None),
-                                default=None,
-                            ),
-                        }
-                    )
+                part_rows = [
+                    {
+                        PART_COL: p,
+                        "row_count": int(pv[f"n_{p}"] or 0),
+                        "live_rows": int(pv[f"l_{p}"] or 0),
+                        "last_applied_lsn": pv[f"m_{p}"],
+                        # match F.lpad(F.hex(bigint)): unsigned 64-bit,
+                        # uppercase, zero-padded to 16
+                        "checksum": format(
+                            (pv[f"x_{p}"] or 0) & 0xFFFFFFFFFFFFFFFF, "016X"
+                        ),
+                        "key_lo": pv[f"a_{p}"],
+                        "key_hi": pv[f"b_{p}"],
+                    }
+                    for p in touched
+                    if p in files
+                ]
             else:
                 part_rows = _written_partition_stats(
                     self.spark, self.table.root, files, evolved, checksum_cols,
@@ -1268,12 +908,12 @@ class CdcEngine:
             n_into_union = (
                 rpt.applied + int(stats["superseded"] or 0) + int(stats["dups"] or 0)
             )
-            if cfg.grouped_resolve:
+            if pre is not None:
                 # grouped pre-resolve dropped (n_pre − n_resolved) events:
                 # duplicates-by-lsn first, the rest lost LWW in-batch
                 n_pre = int(pre["n"])
-                pre_dropped = n_pre - n_into_union
-                pre_dropped_superseded = pre_dropped - pre_dropped_dups
+                pre_dropped_dups = n_pre - int(pre["nd"])
+                pre_dropped_superseded = n_pre - n_into_union - pre_dropped_dups
                 rpt.superseded = (
                     int(stats["superseded"] or 0) + pre_dropped_superseded
                 )
@@ -1305,7 +945,7 @@ class CdcEngine:
                     if int(stats[f"op_{o}"] or 0)
                 }
 
-            # 7. commit snapshot + checkpoint marker (in order)
+            # commit snapshot + checkpoint marker (in order)
             replaced = {}
             for r in part_rows:
                 p = int(r[PART_COL])
@@ -1374,10 +1014,7 @@ class CdcEngine:
             )
             _tick("commit+seen")
         finally:
-            if lsn_pool is not None:
-                lsn_pool.shutdown(wait=True)
-            if events_pinned is not None:
-                events_pinned.unpersist()
+            lsn_pool.shutdown(wait=True)
         return rpt
 
     # --------------------------------------------------------- merge-on-read
@@ -1800,15 +1437,15 @@ class CdcEngine:
         # otherwise replay_verify reports ok=False after any schema evolution
         # even when content is identical.
         live_snap = self.table.snapshot()
+        fsnap = fresh.table.snapshot()
         live_ck = live_snap.get("checksum_columns")
         if live_ck is not None:
-            fsnap = fresh.table.snapshot()
             fsnap["checksum_columns"] = list(live_ck)
-            # the hash definition must match too, or content-identical
-            # tables report digest mismatch (same reasoning as the column
-            # set; absent field = canonical, so copy the absence as well)
-            fsnap["rowhash_mode"] = live_snap.get("rowhash_mode") or "canonical"
-            fresh.table._write_snapshot(fsnap)
+        # the hash definition must match too, or content-identical tables
+        # report digest mismatch (same reasoning as the column set; absent
+        # field = canonical, so copy the absence as well)
+        fsnap["rowhash_mode"] = live_snap.get("rowhash_mode") or "canonical"
+        fresh.table._write_snapshot(fsnap)
         fresh.run(log_dir)
         a, b = self.read(), fresh.read()
         cols = sorted(set(a.columns) & set(b.columns))

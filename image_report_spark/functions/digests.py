@@ -27,13 +27,14 @@ def canonical_cols(df: DataFrame, cols: list[str]) -> list[Column]:
     """Canonicalize columns to strings for stable cross-run digests.
 
     Timestamps → microseconds-since-epoch (timezone-proof), everything else
-    → CAST AS STRING, NULL → sentinel. Deterministic across Spark sessions.
+    → CAST AS STRING, NULL → sentinel. Deterministic across Spark sessions
+    (``timestamp_ntz`` has no time zone, so its string form is too).
     """
     out = []
     for c in cols:
         dt = dict(df.dtypes)[c]
         col = F.col(c)
-        if dt.startswith("timestamp"):
+        if dt == "timestamp":
             col = F.unix_micros(col).cast("string")
         else:
             col = col.cast("string")
@@ -46,11 +47,16 @@ def row_digest(df: DataFrame, cols: list[str]) -> Column:
     return F.xxhash64(F.concat_ws(SEP, *canonical_cols(df, cols)))
 
 
-#: typed NULL sentinels for ``typed_row_digest`` — values no real row can
-#: carry (LONG_MIN microseconds is the year −290308; the string sentinel is
-#: the same control-character form the canonical digest uses)
+#: typed NULL sentinels for ``typed_row_digest``: the minimum value of each
+#: integer width (LONG_MIN also stands for timestamps, as microseconds) and
+#: the canonical digest's control-character form for strings. They are
+#: representable values, so a row holding a column's sentinel hashes like
+#: the same row with NULL there; they were chosen as the least likely
+#: values. Each width has its own sentinel because casting a wider one
+#: down overflows (an error under ANSI, a wrap to 0 — NULL hashing like 0 —
+#: without it).
 _LONG_MIN = -(1 << 63)
-_INT_MIN = -(1 << 31)
+_INT_SENTINELS = {"int": -(1 << 31), "smallint": -(1 << 15), "tinyint": -(1 << 7)}
 
 
 def typed_cols(df: DataFrame, cols: list[str]) -> list[Column]:
@@ -70,12 +76,12 @@ def typed_cols(df: DataFrame, cols: list[str]) -> list[Column]:
     for c in cols:
         dt = dict(df.dtypes)[c]
         col = F.col(c)
-        if dt.startswith("timestamp"):
+        if dt == "timestamp":
             out.append(F.coalesce(F.unix_micros(col), F.lit(_LONG_MIN)))
         elif dt == "bigint":
             out.append(F.coalesce(col, F.lit(_LONG_MIN)))
-        elif dt in ("int", "smallint", "tinyint"):
-            out.append(F.coalesce(col, F.lit(_INT_MIN).cast(dt)))
+        elif dt in _INT_SENTINELS:
+            out.append(F.coalesce(col, F.lit(_INT_SENTINELS[dt]).cast(dt)))
         elif dt == "string":
             out.append(F.coalesce(col, F.lit(NULL)))
         else:

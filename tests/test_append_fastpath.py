@@ -3,9 +3,10 @@
 The scale argument: an insert-heavy stream (bulk load, event-log append,
 new-conversation traffic) under plain COW rewrites every touched
 partition every batch — a load of N batches re-encodes each row ~N/2
-times. The fast-path detects, per partition, "pure inserts + zero key
-overlap with the incumbent" (a keys-only scan + semi-join; tombstones
-count as overlap) and APPENDS: new file, incumbent files carried forward,
+times. The fast-path detects, per partition, "pure inserts + a key range
+strictly disjoint from the incumbent's" (the prepass key range vs the
+manifest's zone map, which tombstones count toward) and APPENDS: new
+file, incumbent files carried forward,
 lineage stats xor-combined (the partition checksum is an
 order-independent bit_xor of per-row hashes, so old ⊕ new is exactly the
 full-rewrite checksum).
@@ -155,13 +156,12 @@ def test_insert_only_batches_append_and_match_rewrite(spark, tmp_path):
 def test_reinsert_collision_forces_rewrite(spark, tmp_path):
     log = str(tmp_path / "log")
     _write_batch(log, 0, [_ins(i, i, 0, f"old{i}") for i in range(8)])
-    # b1 is ALL-I but re-inserts conv 0 turn 0 (later ts wins) + new convs
+    # b1 is ALL-I but re-inserts conv 0 turn 0 (later ts wins) + new convs:
+    # the colliding bucket's key range overlaps its zone map, so it must
+    # take the rewrite path while the other buckets append
     _write_batch(log, 1, [_ins(100, 0, 0, "new0", ts_off_s=60)]
                  + [_ins(101 + i, 20 + i, 0, f"t{20+i}", ts_off_s=60) for i in range(8)])
-    # scan tier enabled: the colliding bucket's ranges overlap, so the
-    # zone maps can't decide — the scan must find the key MATCH and
-    # route the bucket to the rewrite path
-    on = _mk(spark, tmp_path, "on", True, cow_append_scan_min_ratio=0.0)
+    on = _mk(spark, tmp_path, "on", True)
     off = _mk(spark, tmp_path, "off", False)
     r_on = on.run(log)
     off.run(log)
@@ -170,31 +170,6 @@ def test_reinsert_collision_forces_rewrite(spark, tmp_path):
     got = _content(on)
     winner = got[(got.conv_id == "c00000000") & (got.turn_idx == 0)]
     assert winner["text"].tolist() == ["new0"]
-    _assert_equiv(on, off)
-
-
-def test_scan_tier_appends_interleaved_disjoint_keys(spark, tmp_path):
-    """Key ranges overlap (evens then odds) so the metadata tier can't
-    prove disjointness — the keys-only scan tier must still discover that
-    the key SETS are disjoint and append."""
-    log = str(tmp_path / "log")
-    _write_batch(log, 0, [_ins(i, 2 * i, 0, f"e{i}") for i in range(16)])
-    _write_batch(log, 1, [_ins(100 + i, 2 * i + 1, 0, f"o{i}", ts_off_s=60)
-                          for i in range(16)])
-    on = _mk(spark, tmp_path, "on", True, cow_append_scan_min_ratio=0.0)
-    off = _mk(spark, tmp_path, "off", False)
-    on.run(log, max_batches=1)
-    b0_parts = {e["partition"] for e in on.table.snapshot()["manifest"]}
-    r1 = on.run(log)[1]
-    off.run(log)
-    assert r1.partitions_appended > 0
-    assert "classify" in r1.phase_ms  # the scan tier ran
-    # every bucket with BOTH an incumbent and b1 rows appended (2 files);
-    # incumbent-less buckets are plain new-partition writes
-    snap = {e["partition"]: e for e in on.table.snapshot()["manifest"]}
-    assert r1.partitions_appended == sum(
-        1 for p, e in snap.items() if p in b0_parts and len(e["files"]) > 1
-    )
     _assert_equiv(on, off)
 
 
@@ -207,7 +182,7 @@ def test_tombstone_counts_as_overlap(spark, tmp_path):
     # would carry two physical rows for one key)
     _write_batch(log, 2, [_ins(200, 0, 0, "resurrected", ts_off_s=120)]
                  + [_ins(201 + i, 30 + i, 0, f"t{30+i}", ts_off_s=120) for i in range(8)])
-    on = _mk(spark, tmp_path, "on", True, cow_append_scan_min_ratio=0.0)
+    on = _mk(spark, tmp_path, "on", True)
     off = _mk(spark, tmp_path, "off", False)
     r_on = on.run(log)
     off.run(log)
@@ -270,22 +245,108 @@ def test_ck_id_guard_on_checksum_column_set_change(spark, tmp_path):
     _assert_equiv(on, off)
 
 
-@pytest.mark.parametrize("fault", ["mixed", "pure_inserts"])
-def test_generator_stream_equivalence(spark, tmp_path, fault):
-    if fault == "mixed":
-        gen = ChangeLogGenerator(
-            n_convs=40, max_turns=6, n_batches=4, seed=7,
-            dup_frac=0.05, late_frac=0.1, malformed_frac=0.02,
-        )
-    else:
-        gen = ChangeLogGenerator(
-            n_convs=60, max_turns=5, n_batches=4, seed=9,
-            update_frac=0.0, delete_frac=0.0,
-        )
-    log = str(tmp_path / "log")
+def _hand_log(log: str, batches: list[list[dict]]) -> pd.DataFrame:
+    """Write hand-built batches; returns the events in arrival order."""
+    for b, rows in enumerate(batches):
+        _write_batch(log, b, rows)
+    return pd.DataFrame([r for rows in batches for r in rows])
+
+
+def _gen_log(log: str, **kw) -> pd.DataFrame:
+    gen = ChangeLogGenerator(**kw)
     gen.write_log(log)
-    on = _mk(spark, tmp_path, "on", True)
-    off = _mk(spark, tmp_path, "off", False)
+    return gen.events()
+
+
+def _null_keys(log: str) -> pd.DataFrame:
+    """NULL conv_id events group together in the merge window; an update
+    of the null-key row must resolve against it like any other key."""
+    return _hand_log(log, [
+        [_ins(i, i % 6, i // 6, "t", ts_off_s=i) for i in range(24)]
+        + [dict(_ins(90, 0, 0, "t", ts_off_s=1), conv_id=None)],
+        [
+            dict(_ins(100, 0, 0, "null-upd", ts_off_s=500), op="U", conv_id=None),
+            dict(_ins(101, 1, 0, "upd", ts_off_s=500), op="U"),
+            dict(_ins(102, 2, 0, None, ts_off_s=500), op="D"),
+        ],
+    ])
+
+
+def _stale_reinserts(log: str) -> pd.DataFrame:
+    """A pure-insert batch whose events all lose LWW (newer lsn, strictly
+    older ts than the incumbent) changes no row."""
+    return _hand_log(log, [
+        [_ins(i, i, 0, "t", ts_off_s=1000 + i) for i in range(16)],
+        [_ins(100 + i, i, 0, "stale", ts_off_s=i) for i in range(16)],
+    ])
+
+
+def _interleaved_disjoint_keys(log: str) -> pd.DataFrame:
+    """Insert batches whose key RANGES overlap the incumbent's but whose
+    key SETS are disjoint: even then odd conversations, and interleaved
+    turns of one conversation."""
+    return _hand_log(log, [
+        [_ins(i, 2 * i, 0, f"e{i}") for i in range(16)]
+        + [_ins(50 + i, 7, 2 * i + 2, f"t{i}") for i in range(8)],
+        [_ins(100 + i, 2 * i + 1, 0, f"o{i}", ts_off_s=60) for i in range(16)]
+        + [_ins(150 + i, 7, 2 * i + 3, f"u{i}", ts_off_s=60) for i in range(8)],
+    ])
+
+
+def _interleaved_inserts(log: str) -> pd.DataFrame:
+    """Even then odd conversations (interleaved ranges, disjoint keys),
+    then a pure-insert batch re-using an existing key, which must win by
+    ts, next to a brand-new key."""
+    return _hand_log(log, [
+        [_ins(i, 2 * i, 0, f"e{i}", ts_off_s=i) for i in range(16)],
+        [_ins(100 + i, 2 * i + 1, 0, f"o{i}", ts_off_s=100 + i) for i in range(16)],
+        [
+            _ins(200, 0, 0, "re-insert", ts_off_s=999),
+            _ins(201, 100, 0, "new", ts_off_s=999),
+        ],
+    ])
+
+
+#: name → (stream writer returning its events, extra EngineConfig kwargs)
+STREAMS = {
+    "mixed": (lambda log: _gen_log(
+        log, n_convs=40, max_turns=6, n_batches=4, seed=7,
+        dup_frac=0.05, late_frac=0.1, malformed_frac=0.02,
+    ), {}),
+    "pure_inserts": (lambda log: _gen_log(
+        log, n_convs=60, max_turns=5, n_batches=4, seed=9,
+        update_frac=0.0, delete_frac=0.0,
+    ), {}),
+    # replays, bounded out-of-order arrival, late updates and LWW ties,
+    # under both partition-stats tiers (write-job observe and read-back)
+    "ooo_replays": (lambda log: _gen_log(
+        log, seed=11, n_convs=80, max_turns=8, n_batches=5,
+        dup_frac=0.05, ooo_window=6, late_frac=0.10,
+    ), {}),
+    "ooo_replays_readback": (lambda log: _gen_log(
+        log, seed=11, n_convs=80, max_turns=8, n_batches=5,
+        dup_frac=0.05, ooo_window=6, late_frac=0.10,
+    ), {"partstats_observe_limit": 0}),
+    # mid-stream schema evolution: early batches lack `tool`, late ones
+    # add `meta`
+    "evolve": (lambda log: _gen_log(
+        log, seed=21, n_convs=60, max_turns=6, n_batches=6, evolve=True,
+        dup_frac=0.03, late_frac=0.05,
+    ), {}),
+    "null_keys": (_null_keys, {}),
+    "stale_reinserts": (_stale_reinserts, {}),
+    "interleaved_disjoint_keys": (_interleaved_disjoint_keys, {}),
+    "interleaved_inserts": (_interleaved_inserts, {}),
+}
+
+
+@pytest.mark.parametrize("fault", list(STREAMS))
+def test_generator_stream_equivalence(spark, tmp_path, fault):
+    write, cfg = STREAMS[fault]
+    log = str(tmp_path / "log")
+    events = write(log)
+    on = _mk(spark, tmp_path, "on", True, **cfg)
+    off = _mk(spark, tmp_path, "off", False, **cfg)
     r_on = on.run(log)
     r_off = off.run(log)
     for a, b in zip(r_on, r_off):
@@ -298,8 +359,10 @@ def test_generator_stream_equivalence(spark, tmp_path, fault):
         assert all(r.partitions_appended > 0 for r in r_on[1:])
     _assert_equiv(on, off)
     # content still matches the row-wise pandas oracle
-    exp = apply_oracle(gen.events())
+    exp = apply_oracle(events)
     got = _content(on)
-    assert len(got) == len(exp)
-    exp = exp.sort_values(["conv_id", "turn_idx"], kind="stable").reset_index(drop=True)
-    assert got["text"].tolist() == exp["text"].tolist()
+
+    def rows(df):
+        return [(c, int(t), x) for c, t, x in zip(df.conv_id, df.turn_idx, df.text)]
+
+    assert rows(got) == rows(exp)
