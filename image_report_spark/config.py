@@ -100,7 +100,12 @@ class EngineConfig:
     #: (partition column ``p = pmod(xxhash64(conv_id), num_buckets)``)
     num_buckets: int = 32
 
-    #: shuffle parallelism for merge/window stages
+    #: upper bound on the merge exchange's task count (COW and MOR): the
+    #: merge repartitions to ``min(shuffle_partitions, #touched buckets +
+    #: #hot buckets × (skew_salt − 1))`` tasks, an explicit count that AQE
+    #: never coalesces (left to AQE, a small batch's exchange was
+    #: coalesced into a single write task). Other stages take
+    #: ``spark.sql.shuffle.partitions``.
     shuffle_partitions: int = 32
 
     #: failure policy (graft of continue_on_error, reference ir:500-506):
@@ -209,13 +214,16 @@ class EngineConfig:
     partstats_mode: str = "stored"
 
     #: in "stored" mode, when a batch touches at most this many partitions
-    #: the per-partition stats ride the WRITE JOB ITSELF as conditional
-    #: ``observe()`` aggregates (4 per touched partition) — zero extra
-    #: Spark job, zero read-back bytes. Above the limit (wide tables with
+    #: the per-partition live-row count and checksum ride the WRITE JOB
+    #: ITSELF as conditional ``observe()`` aggregates (``count`` and
+    #: ``bit_xor`` of the row hash, 2 per touched partition, evaluated on
+    #: every merged row), and row count, max LSN and the conv_id zone map
+    #: come from the written files' Parquet footers — zero extra Spark job,
+    #: and the row hash is not stored. Above the limit (wide tables with
     #: thousands of buckets, where per-partition observe expressions would
-    #: bloat the plan) the narrow 4-column file read-back is used instead,
-    #: which stays O(partitions) with fixed-width bytes. 0 disables the
-    #: observe tier entirely.
+    #: bloat the plan) the narrow file read-back of the stored row hash is
+    #: used instead, which stays O(partitions) with fixed-width bytes. 0
+    #: disables the observe tier entirely.
     partstats_observe_limit: int = 64
 
     #: "stored"-mode read-back size gate: when a batch's freshly written
@@ -281,6 +289,8 @@ class EngineConfig:
             )
         if self.num_buckets < 1:
             raise ValueError("num_buckets must be >= 1")
+        if self.shuffle_partitions < 1:
+            raise ValueError("shuffle_partitions must be >= 1")
         if self.mor_broadcast_key_limit < 0:
             raise ValueError("mor_broadcast_key_limit must be >= 0")
         if self.mor_compact_delta_ratio is not None and not (

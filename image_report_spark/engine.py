@@ -122,6 +122,104 @@ def _live_row_hash(
     return F.when(F.col("_op") != "D", h)
 
 
+def _merge_exchange(
+    df: DataFrame, cfg: EngineConfig, touched: list[int], hot_buckets: list[int]
+) -> DataFrame:
+    """The merge's one Exchange: ``repartition(n, _p[, _salt])`` with
+    ``n = min(shuffle_partitions, #touched + #hot × (skew_salt − 1))``,
+    the number of distinct (bucket, salt) groups the batch can fill.
+
+    The count is explicit because AQE coalesces an unnumbered
+    repartition by bytes: a 3k-event batch merged into a 20–48k-row,
+    16-bucket table shuffles 1–2 MB, which AQE folds into ONE write task
+    on a 4-core session, leaving three cores idle through the whole
+    window sort, encode and write. A numbered repartition
+    (``REPARTITION_BY_NUM``) is never coalesced. Each task also pays
+    30–70 ms of deserialization, so tasks beyond the groups there are to
+    fill, or beyond ``shuffle_partitions``, only cost.
+
+    ``_salt`` is a key only when it is a real column: a lit(0) salt
+    constant-folds OUT of the window's required clustering but NOT out of
+    hashpartitioning, which would defeat the subset-satisfaction rule and
+    buy a second Exchange (asserted in tests/test_plans.py)."""
+    n = min(
+        cfg.shuffle_partitions,
+        len(touched) + len(hot_buckets) * (cfg.skew_salt - 1),
+    )
+    return df.repartition(
+        n, *([F.col(PART_COL)] + ([F.col("_salt")] if hot_buckets else []))
+    )
+
+
+def _footer_stats(root: str, rels: list[str], read: tuple[str, ...] = ()):
+    """Row count, max ``_lsn`` and the ``conv_id`` zone map of one
+    partition's freshly written files, from their Parquet footers.
+
+    row_count comes from the footer, conv_id min/max and _lsn max from the
+    row-group statistics our own writer just wrote (no truncation
+    configured ⇒ exact; parquet's unsigned-byte string order == Spark's
+    binary collation == python str comparison, pinned against the Spark
+    aggregates in tests/test_partstats.py). A chunk without min/max
+    (all-null conv_id — null merge keys are legal — or a value above the
+    writer's statistics size cap) falls back to reading that column for
+    that file. Returns ``(stats, tables)``: ``tables`` holds each file's
+    ``read`` columns (empty when ``read`` is)."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    n = 0
+    mx = lo = hi = None
+    tables = []
+    for rel in rels:
+        pf = pq.ParquetFile(os.path.join(root, rel))
+        md = pf.metadata
+        idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
+        n += md.num_rows
+        need_read: set = set()
+        f_lo = f_hi = None
+        f_mx = None
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            if rg.num_rows == 0:
+                continue
+            s_c = rg.column(idx["conv_id"]).statistics
+            s_l = rg.column(idx["_lsn"]).statistics
+            if s_c is not None and s_c.has_min_max:
+                f_lo = s_c.min if f_lo is None else min(f_lo, s_c.min)
+                f_hi = s_c.max if f_hi is None else max(f_hi, s_c.max)
+            else:
+                need_read.add("conv_id")
+            if s_l is not None and s_l.has_min_max:
+                f_mx = s_l.max if f_mx is None else max(f_mx, s_l.max)
+            else:
+                need_read.add("_lsn")
+        cols = list(read) + sorted(need_read)
+        t = pf.read(columns=cols) if cols else None
+        if "conv_id" in need_read:
+            mm = pc.min_max(t.column("conv_id")).as_py()
+            f_lo, f_hi = mm["min"], mm["max"]
+        if "_lsn" in need_read:
+            f_mx = pc.max(t.column("_lsn")).as_py()
+        if f_mx is not None:
+            mx = f_mx if mx is None else max(mx, f_mx)
+        if f_lo is not None:
+            lo = f_lo if lo is None else min(lo, f_lo)
+            hi = f_hi if hi is None else max(hi, f_hi)
+        if read:
+            tables.append(t)
+    stats = {"row_count": n, "last_applied_lsn": mx, "key_lo": lo, "key_hi": hi}
+    return stats, tables
+
+
+def _map_partitions(fn, files: dict[int, list[str]]) -> list:
+    """``fn(partition, rels)`` over every written partition on a thread
+    pool: arrow releases the GIL for decode/IO, so threads scale to real
+    parallelism; 16 ≈ one file-open round-trip amortized per ~8 files at
+    128 partitions."""
+    with ThreadPoolExecutor(max_workers=min(16, max(len(files), 1))) as ex:
+        return list(ex.map(lambda item: fn(*item), list(files.items())))
+
+
 def _driver_partition_stats(root: str, files: dict[int, list[str]]) -> list:
     """Driver-side arrow read-back of the narrow stats columns.
 
@@ -134,80 +232,27 @@ def _driver_partition_stats(root: str, files: dict[int, list[str]]) -> list:
     file renames and manifest JSON it already performs per commit —
     instead of paying a Spark job's fixed scheduling latency to do it."""
     import numpy as np
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
 
-    def one(item):
-        p, rels = item
-        n = live = 0
-        mx = None
-        x = 0
-        lo = hi = None
-        for rel in rels:
-            # Only `_h` is READ: `_h` is NULL exactly for tombstones
-            # (xxhash64 over coalesced/concat inputs is never null for a
-            # live row), so its non-null count IS the live-row count and
-            # its values feed the xor checksum. Everything else comes
-            # from file metadata: row_count from the footer, conv_id
-            # min/max and _lsn max from the row-group statistics our own
-            # writer just wrote (no truncation configured ⇒ exact;
-            # parquet's unsigned-byte string order == Spark's binary
-            # collation == python str comparison — the same equivalence
-            # the full-column path relied on). A chunk without min/max
-            # (all-null conv_id — null merge keys are legal) falls back
-            # to reading that column for that file.
-            pf = pq.ParquetFile(os.path.join(root, rel))
-            md = pf.metadata
-            idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-            n += md.num_rows
-            need_read: set = set()
-            f_lo = f_hi = None
-            f_mx = None
-            for g in range(md.num_row_groups):
-                rg = md.row_group(g)
-                if rg.num_rows == 0:
-                    continue
-                s_c = rg.column(idx["conv_id"]).statistics
-                s_l = rg.column(idx["_lsn"]).statistics
-                if s_c is not None and s_c.has_min_max:
-                    f_lo = s_c.min if f_lo is None else min(f_lo, s_c.min)
-                    f_hi = s_c.max if f_hi is None else max(f_hi, s_c.max)
-                else:
-                    need_read.add("conv_id")
-                if s_l is not None and s_l.has_min_max:
-                    f_mx = s_l.max if f_mx is None else max(f_mx, s_l.max)
-                else:
-                    need_read.add("_lsn")
-            t = pf.read(columns=["_h"] + sorted(need_read))
-            if "conv_id" in need_read:
-                mm = pc.min_max(t.column("conv_id")).as_py()
-                f_lo, f_hi = mm["min"], mm["max"]
-            if "_lsn" in need_read:
-                f_mx = pc.max(t.column("_lsn")).as_py()
-            if f_mx is not None:
-                mx = f_mx if mx is None else max(mx, f_mx)
-            if f_lo is not None:
-                lo = f_lo if lo is None else min(lo, f_lo)
-                hi = f_hi if hi is None else max(hi, f_hi)
+    def one(p, rels):
+        # Only `_h` is READ (everything else is footer metadata): `_h` is
+        # NULL exactly for tombstones (xxhash64 over coalesced/concat
+        # inputs is never null for a live row), so its non-null count IS
+        # the live-row count and its values feed the xor checksum.
+        stats, tables = _footer_stats(root, rels, ("_h",))
+        live = x = 0
+        for t in tables:
             hv = t.column("_h").drop_null().to_numpy(zero_copy_only=False)
             live += len(hv)
             if len(hv):
                 x ^= int(np.bitwise_xor.reduce(hv.astype(np.int64).view(np.uint64)))
         return {
             PART_COL: p,
-            "row_count": n,
+            **stats,
             "live_rows": int(live),
-            "last_applied_lsn": mx,
             "checksum": format(x & 0xFFFFFFFFFFFFFFFF, "016X"),
-            "key_lo": lo,
-            "key_hi": hi,
         }
 
-    # arrow releases the GIL for decode/IO, so threads scale to real
-    # parallelism; 16 ≈ one file-open round-trip amortized per ~8 files
-    # at the bench's 128 partitions
-    with ThreadPoolExecutor(max_workers=min(16, max(len(files), 1))) as ex:
-        return list(ex.map(one, list(files.items())))
+    return _map_partitions(one, files)
 
 
 def _written_partition_stats(
@@ -724,9 +769,7 @@ class CdcEngine:
                     append_parts.add(int(r[PART_COL]))
             rpt.partitions_appended = len(append_parts)
         rewrite_parts = [p for p in touched if p not in append_parts]
-        incumbent = self._read_physical(rewrite_parts, evolved).withColumn(
-            "_src", F.lit(0)
-        )
+        incumbent = self._read_physical(rewrite_parts, evolved)
         # one selectExpr instead of withColumn+select+withColumn: the
         # merge construction repeats per batch, so driver round-trips
         # are a per-batch tax (the SQL text parses to the identical
@@ -739,18 +782,13 @@ class CdcEngine:
             "1 AS _src",
         )
 
-        # repartition on _salt only when it's a real column: a lit(0)
-        # salt constant-folds OUT of the window's required clustering
-        # but NOT out of hashpartitioning, which would defeat the
-        # subset-satisfaction rule and buy a second Exchange
-        # (asserted in tests/test_plans.py). No explicit partition count:
-        # AQE sizes/coalesces the exchange; parallelism comes from
-        # #buckets × salt, so num_buckets (not shuffle.partitions) is the
-        # scale knob.
-        u = incumbent.unionByName(evt).withColumn("_salt", salt)
-        u = u.repartition(
-            *([F.col(PART_COL)] + ([F.col("_salt")] if hot_buckets else []))
-        )
+        # no incumbent files (an all-append batch, or a new table): the
+        # events alone enter the exchange — no empty scan to schedule
+        if incumbent is not None:
+            evt = incumbent.withColumn("_src", F.lit(0)).unionByName(evt)
+        # an explicit partition count, or AQE coalesces the exchange into
+        # one write task (measured reason in _merge_exchange)
+        u = _merge_exchange(evt.withColumn("_salt", salt), cfg, touched, hot_buckets)
         # ONE window sort serves everything: within a key, rows sharing
         # an LSN (exact replays — byte-identical; an idempotent re-apply
         # pairs the event with its incumbent) sort adjacently, so replay
@@ -816,15 +854,17 @@ class CdcEngine:
         # force a second full sort)
         phys_cols = [PART_COL] + payload_cols + ["_lsn", "_op", "_salt"]
         # partition-stats tier 1: when the touched set is small enough,
-        # the per-partition lineage aggregates (count / live / max LSN /
-        # bit_xor checksum) ride the WRITE JOB as a second observation —
-        # 4 conditional aggregates per touched partition, zero extra
-        # Spark job, zero read-back bytes, and the per-row hash `_h` is
-        # DROPPED before the write (an incompressible 8 bytes/row that
-        # only the tier-2 read-back would consume). Above the limit the
-        # narrow fixed-width file read-back (tier 2) keeps the plan size
-        # O(1) and persists `_h` for its own scan; "reverify" skips the
-        # pipeline hash entirely and re-hashes the on-disk payloads.
+        # the two lineage aggregates that need the per-row hash (live
+        # count and bit_xor checksum) ride the WRITE JOB as a second
+        # observation — 2 conditional aggregates per touched partition,
+        # zero extra Spark job, and the per-row hash `_h` is DROPPED
+        # before the write (an incompressible 8 bytes/row that only the
+        # tier-2 read-back would consume). Row count, max LSN and the
+        # conv_id zone map come from the written files' footers. Above
+        # the limit the narrow fixed-width file read-back (tier 2) keeps
+        # the plan size O(1) and persists `_h` for its own scan;
+        # "reverify" skips the pipeline hash entirely and re-hashes the
+        # on-disk payloads.
         use_pobs = (
             cfg.partstats_mode == "stored"
             and 0 < len(touched) <= cfg.partstats_observe_limit
@@ -838,16 +878,14 @@ class CdcEngine:
         if use_pobs:
             pobs = Observation(f"pstats-{batch_id}")
             # ONE named_struct expression (single py4j call, parsed
-            # JVM-side) — 4 aggregates per touched partition as Column
-            # objects would add ~100s of py4j round-trips per batch to
-            # the plan phase, the very driver overhead being removed
+            # JVM-side) — the aggregates as Column objects would add ~100s
+            # of py4j round-trips per batch to the plan phase. Every
+            # aggregate here is evaluated on every merged row, so only what
+            # the footers cannot give rides here: `_h` is NULL exactly for
+            # tombstones, so its count is the live-row count.
             entries = ", ".join(
-                f"'n_{p}', sum(if({PART_COL} = {p}, 1, 0)), "
-                f"'l_{p}', sum(if({PART_COL} = {p} and _op <> 'D', 1, 0)), "
-                f"'m_{p}', max(if({PART_COL} = {p}, _lsn, null)), "
-                f"'x_{p}', bit_xor(if({PART_COL} = {p}, _h, null)), "
-                f"'a_{p}', min(if({PART_COL} = {p}, conv_id, null)), "
-                f"'b_{p}', max(if({PART_COL} = {p}, conv_id, null))"
+                f"'l_{p}', count(if({PART_COL} = {p}, _h, null)), "
+                f"'x_{p}', bit_xor(if({PART_COL} = {p}, _h, null))"
                 for p in touched
             )
             to_write = to_write.observe(
@@ -871,28 +909,25 @@ class CdcEngine:
             stats = obs.get
             _tick("write+merge")
 
-            # per-partition lineage: already collected by the write job's
-            # observation (tier 1), else a narrow scan of the written files
-            # ("stored" tier 2) or a full payload re-hash ("reverify")
+            # per-partition lineage: live rows and checksum from the write
+            # job's observation plus the files' footers (tier 1), else a
+            # narrow scan of the written files ("stored" tier 2) or a full
+            # payload re-hash ("reverify")
             if use_pobs:
                 pv = pobs.get["pstats"]
-                part_rows = [
-                    {
+                part_rows = _map_partitions(
+                    lambda p, rels: {
                         PART_COL: p,
-                        "row_count": int(pv[f"n_{p}"] or 0),
+                        **_footer_stats(self.table.root, rels)[0],
                         "live_rows": int(pv[f"l_{p}"] or 0),
-                        "last_applied_lsn": pv[f"m_{p}"],
                         # match F.lpad(F.hex(bigint)): unsigned 64-bit,
                         # uppercase, zero-padded to 16
                         "checksum": format(
                             (pv[f"x_{p}"] or 0) & 0xFFFFFFFFFFFFFFFF, "016X"
                         ),
-                        "key_lo": pv[f"a_{p}"],
-                        "key_hi": pv[f"b_{p}"],
-                    }
-                    for p in touched
-                    if p in files
-                ]
+                    },
+                    files,
+                )
             else:
                 part_rows = _written_partition_stats(
                     self.spark, self.table.root, files, evolved, checksum_cols,
@@ -1075,7 +1110,6 @@ class CdcEngine:
             )
             .withColumn("_salt", salt)
         )
-        repart_cols = [F.col(PART_COL)] + ([F.col("_salt")] if hot_buckets else [])
         # same single-sort window family as the COW merge, minus the
         # incumbent union: LWW rank + same-LSN replay adjacency in one spec
         keyw = Window.partitionBy(PART_COL, "_salt", "conv_id", "turn_idx")
@@ -1084,7 +1118,7 @@ class CdcEngine:
         )
         obs = Observation(f"mor-batch-{batch_id}")
         ranked = (
-            evt.repartition(*repart_cols)
+            _merge_exchange(evt, cfg, touched, hot_buckets)
             .withColumn("_rn", F.row_number().over(order))
             .withColumn(
                 "_replay",
@@ -1463,8 +1497,11 @@ class CdcEngine:
         }
 
     # -------------------------------------------------------------- internals
-    def _read_physical(self, partitions: list[int], logical: StructType) -> DataFrame:
-        """Touched-partition scan through the *evolved* schema projection."""
+    def _read_physical(
+        self, partitions: list[int], logical: StructType
+    ) -> DataFrame | None:
+        """Touched-partition scan through the *evolved* schema projection;
+        None when those partitions have no files."""
         snap = self.table.snapshot()
         from image_report_spark.plans.icelite import physical_schema
 
@@ -1483,7 +1520,7 @@ class CdcEngine:
                     )
                 files.extend(os.path.join(self.table.root, f) for f in e["files"])
         if not files:
-            return self.spark.createDataFrame([], phys)
+            return None
         return self.spark.read.schema(phys).parquet(*files)
 
     def _write_quarantine(self, bad: DataFrame, batch_id: int) -> None:

@@ -212,7 +212,7 @@ class IceliteTable:
             base_df = (
                 self.spark.read.schema(phys).parquet(*dirty_base)
                 if dirty_base
-                else self.spark.createDataFrame([], phys)
+                else self._empty(phys)
             )
             delta_df = self.spark.read.schema(phys).parquet(*dirty_delta)
             u = base_df.withColumn("_d", F.lit(0)).unionByName(
@@ -234,7 +234,7 @@ class IceliteTable:
                 .drop("_rn", "_d")
             )
         if not parts_df:
-            df = self.spark.createDataFrame([], phys)
+            df = self._empty(phys)
         else:
             df = parts_df[0]
             for d in parts_df[1:]:
@@ -274,16 +274,6 @@ class IceliteTable:
         attempt = uuid.uuid4().hex[:8]
         label = dir_label or f"b{batch_id:05d}"
         staging = os.path.join(self.root, "tmp", f"{label}-{attempt}")
-        # zstd level 1 (parquet default is 3): measured on the 2M×8 bench
-        # workload, level 1 writes ~4% more bytes (210 vs 202 MB) for
-        # ~12% less write+merge wall — level 3's extra search buys almost
-        # nothing on short transcript strings, and the encode CPU is paid
-        # on every COW rewrite of every incumbent row. Still well under
-        # snappy/lz4 bytes (the round-5 codec A/B), so the
-        # bandwidth/storage argument for zstd holds at either scale.
-        self.spark.sparkContext._jsc.hadoopConfiguration().set(
-            "parquet.compression.codec.zstd.level", "1"
-        )
         out_df = df_physical.withColumn("p", F.col(PART_COL))
         if not pre_partitioned:
             out_df = out_df.repartition(F.col(PART_COL))
@@ -310,6 +300,16 @@ class IceliteTable:
             # are the resource. Spark's session default (snappy) was the
             # slowest of the four tested.
             .option("compression", "zstd")
+            # zstd level 1 (parquet default is 3): measured on the 2M×8 bench
+            # workload, level 1 writes ~4% more bytes (210 vs 202 MB) for
+            # ~12% less write+merge wall — level 3's extra search buys almost
+            # nothing on short transcript strings, and the encode CPU is paid
+            # on every COW rewrite of every incumbent row. Still well under
+            # snappy/lz4 bytes (the round-5 codec A/B), so the
+            # bandwidth/storage argument for zstd holds at either scale. A
+            # writer option reaches this write's codec only; the session's
+            # Hadoop configuration (every other Parquet write) is untouched.
+            .option("parquet.compression.codec.zstd.level", "1")
             # dictionary encoding OFF for the payload columns:
             # transcript text/keys are near-unique, so the dictionary build
             # is a hash-probe per value that overflows its 1 MB page and
@@ -502,6 +502,12 @@ class IceliteTable:
         return deleted
 
     # -------------------------------------------------------------- internals
+    def _empty(self, phys: StructType) -> DataFrame:
+        """An empty frame over an RDD with zero partitions: nothing to
+        schedule (``createDataFrame([])`` parallelizes an empty list into
+        one Python-worker task per default-parallelism slot)."""
+        return self.spark.createDataFrame(self.spark.sparkContext.emptyRDD(), phys)
+
     def _write_snapshot(self, snap: dict) -> None:
         path = os.path.join(self.meta_dir, f"v{snap['snapshot_id']}.json")
         tmp = path + ".tmp"

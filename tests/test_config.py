@@ -61,6 +61,8 @@ def test_engine_config_validation():
         EngineConfig(update_missing="nope")
     with pytest.raises(ValueError):
         EngineConfig(num_buckets=0)
+    with pytest.raises(ValueError):
+        EngineConfig(shuffle_partitions=0)
     assert EngineConfig(metrics="all").selected_metrics == ALL_METRICS
 
 

@@ -87,3 +87,42 @@ def test_icelite_partition_pruned_read(spark, tmp_path):
     # the pruned scan reads exactly one file (metadata-level pruning)
     assert len(pruned.inputFiles()) == 1
     assert t.read().count() == 4
+
+
+def test_zstd_level_is_scoped_to_the_table_write(spark, tmp_path):
+    """The data-file zstd level is a writer option: a table write leaves
+    the session's Hadoop configuration (every other Parquet write) alone,
+    and the option overrides whatever level that configuration holds —
+    the same batch writes byte-identical files with the session at level
+    19 as without it."""
+    import hashlib
+
+    from image_report_spark.engine import CdcEngine
+    from image_report_spark.fixtures import ChangeLogGenerator
+
+    key = "parquet.compression.codec.zstd.level"
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    log = str(tmp_path / "log")
+    ChangeLogGenerator(seed=53, n_convs=40, max_turns=6, n_batches=1).write_log(log)
+
+    def files(name: str) -> dict:
+        eng = CdcEngine.init(spark, str(tmp_path / name), str(tmp_path / f"{name}-cp"))
+        eng.run(log)
+        return {
+            e["partition"]: [
+                hashlib.sha1(open(os.path.join(eng.table.root, f), "rb").read()).hexdigest()
+                for f in e["files"]
+            ]
+            for e in eng.table.snapshot()["manifest"]
+        }
+
+    hconf.unset(key)
+    try:
+        plain = files("plain")
+        assert hconf.get(key) is None
+        hconf.set(key, "19")
+        at19 = files("session19")
+        assert hconf.get(key) == "19"
+    finally:
+        hconf.unset(key)
+    assert plain and plain == at19

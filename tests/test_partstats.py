@@ -106,6 +106,9 @@ def _lineage(snap):
             e["live_rows"],
             e["checksum"],
             e["last_applied_lsn"],
+            # the zone map the append fast path trusts
+            e["key_lo"],
+            e["key_hi"],
         )
         for e in snap["manifest"]
     }
@@ -119,8 +122,8 @@ def test_all_three_tiers_identical(spark, tmp_path):
     assert s1["table_digest"] == s2["table_digest"] == s3["table_digest"]
     assert r1.table_digest == r2.table_digest == r3.table_digest
     assert len(_lineage(s1)) >= 2  # actually spread over partitions
-    for rc, live, cks, lsn in _lineage(s1).values():
-        assert rc >= live and len(cks) == 16
+    for rc, live, cks, lsn, lo, hi in _lineage(s1).values():
+        assert rc >= live and len(cks) == 16 and lo <= hi
 
 
 def test_observe_tier_skips_readback_and_narrow_uses_it(spark, tmp_path, monkeypatch):
@@ -236,21 +239,31 @@ def test_second_batch_and_reapply_stable_under_observe_tier(spark, tmp_path):
     assert rpt2.conservation_ok()
 
 
-def test_driver_tier_matches_spark_readback_with_null_keys(spark, tmp_path):
-    """Null merge keys are legal and produce files whose conv_id column
-    chunk can be all-null (no footer min/max) — the driver tier's
-    footer-statistics shortcut must fall back to reading the column and
-    still match the Spark read-back exactly."""
+def _null_key_events(spark, all_null=False):
     rows = _events_df(spark).toPandas()
-    extra = rows.iloc[:3].copy()
-    extra["conv_id"] = None
-    extra["lsn"] = extra["lsn"] + 5000
-    pdf = pd.concat([rows, extra], ignore_index=True)
-    ev = spark.createDataFrame(
+    if all_null:
+        rows["conv_id"] = None
+        pdf = rows
+    else:
+        extra = rows.iloc[:3].copy()
+        extra["conv_id"] = None
+        extra["lsn"] = extra["lsn"] + 5000
+        pdf = pd.concat([rows, extra], ignore_index=True)
+    return spark.createDataFrame(
         pdf,
         schema="lsn long, op string, conv_id string, turn_idx int, "
         "role string, text string, tool string, ts timestamp",
     )
+
+
+def test_driver_tier_matches_spark_readback_with_null_keys(spark, tmp_path):
+    """Null merge keys are legal and produce files whose conv_id column
+    chunk can be all-null (no footer min/max) — the driver tier's
+    footer-statistics shortcut must fall back to reading the column and
+    still match the Spark read-back exactly. The default observe tier
+    takes its zone map from the same footers and must commit the same
+    manifest entries."""
+    ev = _null_key_events(spark)
     eng = CdcEngine.init(
         spark,
         str(tmp_path / "nullk" / "tbl"),
@@ -259,6 +272,16 @@ def test_driver_tier_matches_spark_readback_with_null_keys(spark, tmp_path):
     )
     eng.apply_batch(ev, 0)
     snap = eng.table.snapshot()
+    obs = CdcEngine.init(
+        spark,
+        str(tmp_path / "nullk-observe" / "tbl"),
+        str(tmp_path / "nullk-observe" / "cp"),
+        config=EngineConfig(num_buckets=4),
+    )
+    obs.apply_batch(ev, 0)
+    osnap = obs.table.snapshot()
+    assert _lineage(osnap) == _lineage(snap)
+    assert osnap["table_digest"] == snap["table_digest"]
     logical = eng.table.logical_schema()
     cols = snap.get("checksum_columns") or [f.name for f in logical.fields]
     files = {
@@ -298,3 +321,33 @@ def test_driver_tier_matches_spark_readback(spark, tmp_path):
         for f in ("row_count", "live_rows", "last_applied_lsn", "checksum",
                   "key_lo", "key_hi"):
             assert a[f] == b[f], (a["_p"], f, a[f], b[f])
+
+
+def test_all_null_key_partition_has_unknown_zone_map_on_every_tier(spark, tmp_path):
+    """A batch whose merge keys are all NULL writes a file whose conv_id
+    chunk has no min/max: every tier (observe + footers, driver read-back,
+    Spark read-back) must fall back to the column and agree on an unknown
+    (NULL) zone map, which keeps the partition off the append fast path."""
+    ev = _null_key_events(spark, all_null=True)
+    snaps = {}
+    for name, cfg in (("observe", {}), ("driver", {"partstats_observe_limit": 0})):
+        eng = CdcEngine.init(
+            spark,
+            str(tmp_path / name / "tbl"),
+            str(tmp_path / name / "cp"),
+            config=EngineConfig(num_buckets=4, **cfg),
+        )
+        eng.apply_batch(ev, 0)
+        snaps[name] = eng.table.snapshot()
+    assert _lineage(snaps["observe"]) == _lineage(snaps["driver"])
+    entries = [e for e in snaps["observe"]["manifest"] if e["files"]]
+    assert len(entries) == 1 and entries[0]["key_lo"] is None is entries[0]["key_hi"]
+    logical = eng.table.logical_schema()
+    files = {e["partition"]: e["files"] for e in snaps["driver"]["manifest"] if e["files"]}
+    via_job = engine_mod._written_partition_stats(
+        spark, eng.table.root, files, logical, [f.name for f in logical.fields],
+        "stored", 0, snaps["driver"].get("rowhash_mode") or "canonical",
+    )
+    assert [(r["key_lo"], r["key_hi"], r["last_applied_lsn"]) for r in via_job] == [
+        (None, None, entries[0]["last_applied_lsn"])
+    ]

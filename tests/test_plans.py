@@ -8,9 +8,11 @@ files; filters and column pruning reach the Parquet scan.
 from __future__ import annotations
 
 import io
+import os
 import re
 from contextlib import redirect_stdout
 
+import pytest
 from pyspark.sql import functions as F
 
 from image_report_spark.config import EngineConfig
@@ -74,6 +76,100 @@ def test_merge_pipeline_has_single_exchange(spark, tmp_path):
     # in the detail section — count distinct Exchange NODES
     n_exchanges = len(set(re.findall(r"\(\d+\) Exchange", plan)))
     assert n_exchanges == 1, plan  # the windows add sorts, never exchanges
+
+
+def _capture_writes(monkeypatch) -> list:
+    """Every frame the engine hands to ``IceliteTable.write_partition_files``
+    (the COW merge's ``to_write``), captured on its way to the real write."""
+    from image_report_spark.plans.icelite import IceliteTable
+
+    frames = []
+    real = IceliteTable.write_partition_files
+
+    def spy(self, df, *a, **kw):
+        frames.append(df)
+        return real(self, df, *a, **kw)
+
+    monkeypatch.setattr(IceliteTable, "write_partition_files", spy)
+    return frames
+
+
+def _shuffle_exchanges(plan: str) -> list[str]:
+    # shuffle Exchange nodes only (the dedup-window anti-join may add a
+    # BroadcastExchange, which moves the small LSN set, not the rows)
+    return re.findall(r"(?<![A-Za-z])Exchange (.*)", plan)
+
+
+def _insert_batch(log: str, batch_id: int, convs: range) -> None:
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(log, exist_ok=True)
+    ts0 = pd.Timestamp("2026-01-01T00:00:00")
+    rows = [
+        dict(lsn=batch_id * 1000 + i, op="I", conv_id=f"c{c:08d}", turn_idx=0,
+             role="user", text=f"t{c}", tool=None, ts=ts0)
+        for i, c in enumerate(convs)
+    ]
+    schema = pa.schema([
+        ("lsn", pa.int64()), ("op", pa.string()), ("conv_id", pa.string()),
+        ("turn_idx", pa.int32()), ("role", pa.string()), ("text", pa.string()),
+        ("tool", pa.string()), ("ts", pa.timestamp("us")),
+    ])
+    pq.write_table(
+        pa.Table.from_pandas(pd.DataFrame(rows), schema=schema, preserve_index=False),
+        os.path.join(log, f"batch-{batch_id:05d}.parquet"),
+    )
+
+
+@pytest.mark.parametrize("shuffle_partitions", [3, 32])
+def test_engine_merge_exchange_is_numbered(spark, tmp_path, monkeypatch, shuffle_partitions):
+    """The engine's OWN merge frame (not a copy of it): one shuffle
+    Exchange, ``hashpartitioning(_p, n)`` with an explicit count, so AQE
+    can never coalesce the merge into fewer write tasks than
+    ``n = min(shuffle_partitions, #touched buckets)``."""
+    gen = ChangeLogGenerator(seed=52, n_convs=60, max_turns=5, n_batches=2)
+    log = str(tmp_path / "log")
+    gen.write_log(log)
+    eng = CdcEngine.init(
+        spark, str(tmp_path / "t"), str(tmp_path / "cp"),
+        config=EngineConfig(num_buckets=8, shuffle_partitions=shuffle_partitions),
+    )
+    frames = _capture_writes(monkeypatch)
+    reports = eng.run(log)
+    assert len(frames) == len(reports) == 2
+    r = reports[1]  # merges against incumbents
+    assert r.partitions_touched > 3 and r.partitions_appended == 0
+    n = min(shuffle_partitions, r.partitions_touched)
+    plan = _executed_plan(frames[1])
+    ex = _shuffle_exchanges(plan)
+    assert len(ex) == 1, plan
+    assert re.match(rf"hashpartitioning\(_p#\d+, {n}\), REPARTITION_BY_NUM", ex[0]), ex
+
+
+def test_insert_only_merge_schedules_no_empty_scan(spark, tmp_path, monkeypatch):
+    """An all-append batch reads no incumbent: its merge is the events
+    alone through the numbered exchange, with no empty-RDD scan (which
+    used to cost one empty Python-worker task per default-parallelism
+    slot)."""
+    log = str(tmp_path / "log")
+    _insert_batch(log, 0, range(16))
+    _insert_batch(log, 1, range(16, 32))  # keys above every zone map
+    eng = CdcEngine.init(
+        spark, str(tmp_path / "t"), str(tmp_path / "cp"),
+        config=EngineConfig(num_buckets=8, shuffle_partitions=8),
+    )
+    frames = _capture_writes(monkeypatch)
+    r0, r1 = eng.run(log)
+    assert r1.partitions_appended == r1.partitions_touched > 0
+    for r, df in ((r0, frames[0]), (r1, frames[1])):
+        plan = _executed_plan(df)
+        assert "Scan ExistingRDD" not in plan, plan
+        ex = _shuffle_exchanges(plan)
+        assert len(ex) == 1, plan
+        n = min(8, r.partitions_touched)
+        assert re.match(rf"hashpartitioning\(_p#\d+, {n}\), REPARTITION_BY_NUM", ex[0]), ex
 
 
 def test_pruned_read_lists_only_touched_files(spark, tmp_path):
